@@ -615,37 +615,9 @@ object BenchFormat {
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Session.cpus
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // AQE's partition coalescing is BYTE-based (parallelismFirst respects
-      // minPartitionSize, default 1m) — for CPU-dense columns (codec decode,
-      // shingle/verify kernels) a sub-1MB shuffle coalesces to ONE task and
-      // serializes seconds of compute (r21 profile: q_similarity_join's
-      // verify stage, 0.9MB / 0.87s on one core). A lower floor restores
-      // parallelism exactly and only where bytes are small; at production
-      // scale partitions exceed any floor, so the setting is inert there.
-      // Env-parameterized so the driver's bench stays comparable/auditable.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION", "64k"))
-      // NOTE (r21 A/B, inconclusive → left at Spark default): guide §9's
-      // preferSortMergeJoin=false (+ AQE SHJ local-map threshold) was
-      // A/B'd 2×2 on the graph/dedup subset to kill the per-iteration
-      // sorts of the cached edge frame; deltas stayed inside window noise
-      // (17.5-17.9 vs 17.3-19.8 s totals, q_hits slightly WORSE under
-      // SHJ), so the default stays.
-      // NOTE (r21 A/B, rejected): canChangeCachedPlanOutputPartitioning=
-      // true was tried to let AQE re-coalesce the tiny cached graph/dedup
-      // frames — it consistently REGRESSED the graph loops (q_pagerank
-      // 2.9-3.0 -> 3.1-4.1 s across four alternating runs: coalescing the
-      // cache breaks the src/node co-partitioning the per-iteration joins
-      // rely on, re-adding exchanges). Default (false) kept deliberately.
-      .getOrCreate()
+    val spark = Session.build()
     spark.sparkContext.setLogLevel("WARN")
     graft.functions.Graph.quietCheckpointReleaseWarns()
 
@@ -712,13 +684,7 @@ object Bench {
       // accumulate in the shared block manager and slow late reps (the
       // round-17 q_pagerank 6.7->7.4->8.1 monotone-rep artifact). Nothing
       // from a finished rep is ever recomputed, so drop them eagerly.
-      // SPARK_GRAFT_LEAK_RDDS=1 disables the release for A/B attribution.
-      if (!sys.env.get("SPARK_GRAFT_LEAK_RDDS").contains("1")) {
-        val leaked = spark.sparkContext.getPersistentRDDs
-        if (sys.env.get("SPARK_GRAFT_RDD_DEBUG").contains("1") && leaked.nonEmpty)
-          System.err.println(s"[bench] $name: releasing ${leaked.size} leftover persistent RDDs")
-        leaked.values.foreach(_.unpersist(blocking = false))
-      }
+      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
       gcSamples(name) = gcSamples.getOrElse(name, Vector.empty) :+ (gcMs() - gc0) / 1000.0
       storeSamples(name) = storeSamples.getOrElse(name, Vector.empty) :+
         spark.sparkContext.getExecutorMemoryStatus.values

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,20 +9,7 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // same CPU-dense-stage AQE coalescing floor as the engine CLI and
-      // bench sessions (see cli.Main.buildSession) — results are
-      // partitioning-independent; this only restores parallelism on
-      // sub-1MB shuffles feeding expensive per-row kernels
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION", "64k"))
-      .getOrCreate()
+    val spark = Session.build()
     spark.sparkContext.setLogLevel("WARN")
     graft.functions.Graph.quietCheckpointReleaseWarns()
     new java.io.File(outDir).mkdirs()

@@ -83,10 +83,12 @@ final class Engine(spark: SparkSession) {
   // ------------------------------------------------------------- execute
   /** Execute the plan. `collectCounts` additionally row-counts every node
     * (the reference's --results-file epilogue, earthmover.py:409-419) —
-    * extra actions, so off by default. */
-  def execute(plan: Plan, outputDir: Option[Path] = None, persistFanOut: Boolean = true,
+    * extra actions, so off by default. A transformation with more than one
+    * consumer is persisted for the run and released when it ends. */
+  def execute(plan: Plan, outputDir: Option[Path] = None,
               collectCounts: Boolean = false): RunResult = {
     val frames = scala.collection.mutable.Map[String, DataFrame]()
+    val persisted = scala.collection.mutable.Buffer[DataFrame]()
     val written = Map.newBuilder[String, Path]
     val counts = Map.newBuilder[String, Long]
     val outDir = outputDir.getOrElse(Paths.get(plan.project.outputDir))
@@ -132,7 +134,7 @@ final class Engine(spark: SparkSession) {
                 located(s"$full.operations.$i", e, s" operation `$opName`:") }
           }
           val post = postProcess(result, cfg, full)
-          frames(full) = if (persistFanOut && consumers(full) > 1) post.persist() else post
+          frames(full) = if (consumers(full) > 1) { persisted += post; post.persist() } else post
         case "destinations" =>
           val src = frames(resolveRef(Config.reqStr(cfg, "source", full)))
           // name the jobs so progress lines / Spark UI attribute to the node
@@ -144,7 +146,10 @@ final class Engine(spark: SparkSession) {
         located(full, e) }
       if (collectCounts && frames.contains(full))
         counts += (full -> frames(full).count())
-    } finally progress.foreach(spark.sparkContext.removeSparkListener)
+    } finally {
+      progress.foreach(spark.sparkContext.removeSparkListener)
+      persisted.foreach(_.unpersist(blocking = false))
+    }
     RunResult(written.result(), counts.result())
   }
 

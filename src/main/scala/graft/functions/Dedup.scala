@@ -530,20 +530,6 @@ object Dedup {
       .select(col("id"), col("__r__.toks").as("toks"), col("__r__.sig").as("sig"))
   }
 
-  /** MinHash signature column: for each of `numHashes` seeded xxhash64
-    * functions, the minimum hash over the document's distinct tokens.
-    * Pure higher-order-function expression — no UDF, no shuffle. */
-  def minhashSignature(textCol: String, numHashes: Int, shingleSize: Int = 3): Column = {
-    val toks = shingles(textCol, shingleSize)
-    // Single pass over the shingles with an array accumulator: one expression
-    // evaluation per row (64 separate array_min(transform(...)) columns would
-    // re-walk the shingle array per hash function and blow up codegen).
-    aggregate(toks, array_repeat(lit(Long.MaxValue), numHashes),
-      (acc, t) => zip_with(acc,
-        transform(sequence(lit(0), lit(numHashes - 1)), h => xxhash64(t, h)),
-        (a, b) => least(a, b)))
-  }
-
   /** MinHash + LSH near-duplicate candidate pairs, verified by exact Jaccard.
     *
     * Signature of `numHashes` minhashes split into `bands`; documents

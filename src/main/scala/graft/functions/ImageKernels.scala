@@ -609,7 +609,7 @@ object ImageKernels {
     * `(299r + 587g + 114b) / 1000`). */
   final case class Gray(w: Int, h: Int, px: Array[Int])
 
-  /** Probe/test face for [[decodeGray]]. */
+  /** Test face for [[decodeGray]]. */
   def decodeGrayPublic(b: Array[Byte]): Gray = decodeGray(b)
 
   /** Test face for the native TIFF path alone (no ImageIO fallback) — lets

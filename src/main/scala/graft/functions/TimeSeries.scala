@@ -204,8 +204,9 @@ object TimeSeries {
     // next neighbor = last-before over the REVERSED order, NOT a
     // (1, unboundedFollowing) frame: Spark evaluates unbounded-FOLLOWING
     // frames by rescanning to the partition end for every row — O(n²) per
-    // key, a hang at 60k-row keys (TimeSeriesProbe) — while both
-    // unbounded-PRECEDING frames here are incremental running frames.
+    // key, a hang at 60k-row keys (PLANS.md, round-14 time-series scale
+    // legs) — while both unbounded-PRECEDING frames here are incremental
+    // running frames.
     // Same partitioning → one Exchange, two sorts.
     val revOrder = (t.desc +: tieBreak.map(col(_).desc))
     val baseRev = Window.partitionBy(partitionBy.map(col): _*).orderBy(revOrder: _*)

@@ -161,10 +161,6 @@ object Vp8 {
   def decode(data: Array[Byte], off: Int, len: Int, filter: Boolean = true): Planes =
     new Decoder(data, off, len).run(filter)
 
-  /** Diagnostic face for tools.Vp8Probe. */
-  private[graft] def debug(data: Array[Byte], off: Int, len: Int): String =
-    new Decoder(data, off, len).debugString
-
   // =================================================================== impl
 
   private final class Decoder(data: Array[Byte], off: Int, len: Int) {
@@ -232,46 +228,6 @@ object Vp8 {
       reconstruct()
       if (filter && filterLevel > 0) loopFilter()
       Planes(w, h, yStride, cStride, Y, U, V)
-    }
-
-    /** Diagnostic dump for tools.Vp8Probe: header knobs + per-MB modes. */
-    def debugString: String = {
-      parseHeader()
-      parseModes()
-      val sb = new StringBuilder
-      sb.append(s"mb=${mbW}x$mbH parts=${parts.length} seg=$segEnabled(map=$segUpdateMap abs=$segAbsolute) ")
-      sb.append(s"filter=${if (simpleFilter) "simple" else "normal"} lvl=$filterLevel sharp=$sharpness ")
-      sb.append(s"lfDelta=$lfDeltaEnabled useSkip=$useSkip\n")
-      val names = Array("DC", "V ", "H ", "TM", "B!")
-      var my = 0
-      while (my < mbH) {
-        var mx = 0
-        while (mx < mbW) {
-          val mi = my * mbW + mx
-          sb.append(names(mbYMode(mi) & 0xFF))
-          sb.append(if (mbSkip(mi)) "s" else " ")
-          sb.append(mbSeg(mi) & 0xFF).append(" uv").append(mbUvMode(mi) & 0xFF).append("  ")
-          mx += 1
-        }
-        sb.append('\n')
-        my += 1
-      }
-      my = 0
-      while (my < mbH) {
-        var mx = 0
-        while (mx < mbW) {
-          val mi = my * mbW + mx
-          if ((mbYMode(mi) & 0xFF) == B_PRED) {
-            sb.append(s"B mb($mx,$my): ")
-            var k = 0
-            while (k < 16) { sb.append(mbBModes(mi * 16 + k) & 0xFF).append(' '); k += 1 }
-            sb.append('\n')
-          }
-          mx += 1
-        }
-        my += 1
-      }
-      sb.toString
     }
 
     // ------------------------------------------------------ header (sec 9)

@@ -51,13 +51,7 @@ object BigAttendance {
     // apples-to-apples than the partitioned sink, slower by design
     val stages: Set[String] =
       if (args.length > 1) args(1).split(",").toSet else Set("gen", "run", "check")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
-      .appName("graft-big-attendance")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.build()
     try {
       if (stages("gen")) gen(spark, rows)
       if (stages("run")) run(partitioned = true)

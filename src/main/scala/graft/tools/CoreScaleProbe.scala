@@ -14,25 +14,18 @@
 // OPTIMIZATION_r22.md. Not part of the driver contract; local diagnosis.
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ops.Ops
 
 object CoreScaleProbe {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = graft.Session.cpus
     val base = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "/tmp/graft-corescale")
     val liRows = sys.env.getOrElse("SPARK_GRAFT_SCALE_LI_ROWS", "6000000").toLong
     val evRows = sys.env.getOrElse("SPARK_GRAFT_SCALE_EV_ROWS", "10000000").toLong
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "2").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION", "64k"))
-      .getOrCreate()
+    val spark = graft.Session.build()
     spark.sparkContext.setLogLevel("WARN")
 
     // deterministic sf1-class fixtures, generated once (hash-derived

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dumps the BPE merge table trained on the gate corpus (sf0.01
   * documents) as the DuckDB MAP literal the q_bpe_count oracle embeds —
   * the same embed-the-model-at-gate-scale pattern as DumpSimhash. */
@@ -9,10 +7,7 @@ object DumpBpe {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val numMerges = if (args.length > 1) args(1).toInt else 60
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.build()
     spark.sparkContext.setLogLevel("WARN")
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val merges = graft.functions.Bpe.train(docs, "text", numMerges, 10000)

@@ -1,12 +1,10 @@
 // scratch: dump the LSH hyperplane sign matrix for the q_ann_lsh oracle SQL
 package graft.tools
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 object DumpPlanes {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[2]")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Session.build()
     spark.sparkContext.setLogLevel("ERROR")
     val numPlanes = 4; val dim = 64
     val rows = spark.range(1).select((0 until numPlanes).map { p =>

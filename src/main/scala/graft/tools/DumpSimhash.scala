@@ -3,14 +3,11 @@
 // them, so the oracle seeds from these exact production values and verifies
 // the banding + hamming join independently)
 package graft.tools
-import org.apache.spark.sql.SparkSession
 
 object DumpSimhash {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Session.build()
     spark.sparkContext.setLogLevel("ERROR")
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val sigs = graft.functions.Dedup.simhashSignatures(docs, "doc_id", "text")

@@ -4,15 +4,11 @@
 // shared boilerplate line so jaccard/minhash/boilerplate/CC all have work)
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 object GenCorpus {
   def main(args: Array[String]): Unit = {
     val outDir = args.headOption.getOrElse("/tmp/graft-scale10x")
     val nDocs = args.lift(1).map(_.toInt).getOrElse(50000)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Session.build()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

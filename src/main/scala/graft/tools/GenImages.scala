@@ -14,9 +14,9 @@ import graft.functions.ImageKernels
   *
   * Dedup fixture (q_image_phash_dedup): 64×64 blocky pattern seeded by
   * id%250 — ids ≥250 add a faint low-frequency gradient (amp 3, pHash
-  * hamming ≤2 measured over the pattern family, unrelated patterns ≥16;
-  * tools/ImageProbe calibration) — rotating PNG / BMP / baseline-JPEG /
-  * TIFF containers (id%4) so near-dup detection is exercised ACROSS
+  * hamming ≤2 measured over the pattern family, unrelated patterns ≥16)
+  * — rotating PNG / BMP / baseline-JPEG / TIFF containers (id%4) so
+  * near-dup detection is exercised ACROSS
   * formats, including the native T.81 and TIFF strip decode paths
   * (JpegSpec pins the pair/non-pair hamming margins with the JPEG
   * members present). */

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /**
  * Plan audit: dump formatted physical plans for representative queries and
  * grep-check the properties that matter at scale — filter/projection
@@ -12,13 +10,7 @@ import org.apache.spark.sql.SparkSession
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = graft.Session.build()
     spark.sparkContext.setLogLevel("ERROR")
 
     val interesting = Seq(

@@ -5,16 +5,13 @@
 // PLANS.md ("scale smoke").
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.functions.{Corpus, Dedup}
 
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val dirs = if (args.nonEmpty) args.toSeq
       else Seq("/root/testdata/sf0.01", "/root/testdata/sf0.1", "/tmp/graft-scale10x")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Session.build()
     spark.sparkContext.setLogLevel("WARN")
 
     def time[A](f: => A): (A, Double) = {

@@ -107,6 +107,16 @@ class EngineSpec extends SparkSpec {
     assert(summary.head.contains(""""total_weight": "240.0""""))
   }
 
+  test("execute releases fan-out persists: no CacheManager entries after a run") {
+    // `cats` feeds both the zoo_animals transformation and the cats
+    // destination, so execute persists it for the run
+    val dir = writeProject()
+    spark.catalog.clearCache()
+    new Engine(spark).run(dir.resolve("project.yaml").toString,
+      params = Map("OUT_DIR" -> dir.resolve("out-cache").toString))
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
   test("selector pruning runs only the selected destination subgraph") {
     val dir = writeProject()
     val outDir = dir.resolve("out-sel")
