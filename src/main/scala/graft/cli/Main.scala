@@ -125,11 +125,11 @@ object Main {
         val (spark, owned) = session()
         try {
           val t0 = System.nanoTime()
-          val engine = new Engine(spark)
-          val plan = engine.compile(project, selector)
-          val result = engine.execute(plan,
+          val plan = Engine.compile(project, selector)
+          val result = new Engine(spark).execute(plan,
             outputDir.map(java.nio.file.Paths.get(_)),
             collectCounts = resultsFile.nonEmpty)
+          // topological order, so the lines are the same on every run
           result.written.foreach { case (node, path) => println(s"$node -> $path") }
           // `-g` or `config: show_graph: True` (earthmover.py:394-407)
           if (showGraph || Config.bool(project.config, "show_graph"))
@@ -148,16 +148,14 @@ object Main {
       case "compile" =>
         // validate, and write the composed project to disk like the
         // reference's earthmover_compiled.yaml (earthmover.py:29,171-172)
+        // — config and DAG work only, so no SparkSession is started
         val project = loadProject()
-        val (spark, owned) = session()
-        try {
-          val plan = new Engine(spark).compile(project, selector)
-          if (showGraph) writeGraphDot(plan.dag, project.outputDir)
-          Files.writeString(Paths.get(CompiledYamlFile), Config.dumpYaml(project.raw))
-          println(s"compiled OK: ${project.sources.size} sources, " +
-            s"${project.transformations.size} transformations, ${project.destinations.size} destinations")
-          println(s"wrote $CompiledYamlFile")
-        } finally if (owned) spark.stop()
+        val plan = Engine.compile(project, selector)
+        if (showGraph) writeGraphDot(plan.dag, project.outputDir)
+        Files.writeString(Paths.get(CompiledYamlFile), Config.dumpYaml(project.raw))
+        println(s"compiled OK: ${project.sources.size} sources, " +
+          s"${project.transformations.size} transformations, ${project.destinations.size} destinations")
+        println(s"wrote $CompiledYamlFile")
 
       case "deps" =>
         // install declared packages — local copies and git clones — into

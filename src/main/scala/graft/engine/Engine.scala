@@ -2,6 +2,11 @@ package graft.engine
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Path, Paths}
+import java.util.concurrent.{CompletableFuture, ConcurrentHashMap, ConcurrentLinkedQueue,
+  LinkedBlockingQueue, ThreadPoolExecutor, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+import scala.collection.concurrent.TrieMap
+import scala.collection.immutable.SeqMap
 import graft.ops.Ops
 
 /**
@@ -25,22 +30,24 @@ object Engine {
     }
   }
 
-  final case class RunResult(written: Map[String, Path], rowCounts: Map[String, Long])
+  /** `written` is in topological order, the order `graft run` prints it. */
+  final case class RunResult(written: SeqMap[String, Path], rowCounts: Map[String, Long])
 
   /** A config error already carrying its `file.yaml:LINE` location — the
     * node-level wrapper must not prefix it a second time. Subtype of
     * IllegalArgumentException so existing handlers/tests are unaffected. */
   final class LocatedException(message: String, cause: Throwable)
     extends IllegalArgumentException(message, cause)
-}
-
-final class Engine(spark: SparkSession) {
-  import Engine.{Plan, RunResult}
 
   // ------------------------------------------------------------- compile
+  /** Config → DAG: pure driver work, no Spark (`graft compile` starts no
+    * session). Edges are data references plus one ordering edge per
+    * `model_file` an `nb_train` writes and an `nb_classify` reads, so the
+    * scorer runs after the trainer whatever the node names. */
   def compile(project: Config.Project, selector: String = "*"): Plan = {
     val nodes = scala.collection.mutable.Set[String]()
     val edges = scala.collection.mutable.Set[(String, String)]()
+    val modelWrites, modelReads = scala.collection.mutable.Set[(Path, String)]()
 
     project.sources.keys.foreach(n => nodes += s"sources.$n")
     project.transformations.foreach { case (n, cfgAny) =>
@@ -54,8 +61,16 @@ final class Engine(spark: SparkSession) {
         Config.asList(op.getOrElse("sources", Nil)).foreach { s =>
           edges += (resolveRef(s.toString) -> full)
         }
+        def model = Config.str(op, "model_file").map(project.configDir.resolve(_).normalize)
+        Config.str(op, "operation") match {
+          case Some("nb_train") => model.foreach(p => modelWrites += (p -> full))
+          case Some("nb_classify") => model.foreach(p => modelReads += (p -> full))
+          case _ =>
+        }
       }
     }
+    for ((p, train) <- modelWrites; (q, score) <- modelReads if p == q && train != score)
+      edges += (train -> score)
     project.destinations.foreach { case (n, cfgAny) =>
       val full = s"destinations.$n"
       nodes += full
@@ -80,77 +95,161 @@ final class Engine(spark: SparkSession) {
     r
   }
 
+  /** Thrown by a node task that starts after an earlier node failed. */
+  private object Skipped extends RuntimeException(null, null, false, false)
+}
+
+final class Engine(spark: SparkSession) {
+  import Engine.{Plan, RunResult, resolveRef}
+
+  /** Forwarder kept for callers holding an engine instance. */
+  def compile(project: Config.Project, selector: String = "*"): Plan =
+    Engine.compile(project, selector)
+
   // ------------------------------------------------------------- execute
-  /** Execute the plan. `collectCounts` additionally row-counts every node
-    * (the reference's --results-file epilogue, earthmover.py:409-419) —
-    * extra actions, so off by default. A transformation with more than one
-    * consumer is persisted for the run and released when it ends. */
+  /** Execute the plan. Each node runs on a per-run driver pool as soon as
+    * its predecessors are defined, so independent branches submit their
+    * Spark jobs at the same time; a chain runs one node at a time. The
+    * workers are started from the caller, so they inherit its Spark local
+    * properties, active session and Console streams.
+    *
+    * `collectCounts` additionally row-counts every node (the reference's
+    * --results-file epilogue, earthmover.py:409-419) — extra actions, each
+    * its own task, so off by default. A transformation with more than one
+    * consumer is persisted for the run and released when it ends; under
+    * `collectCounts` its consumers start after its count has filled the
+    * cache.
+    *
+    * When a node fails, the jobs of running nodes after it in topological
+    * order are cancelled and no node after it starts; nodes before it still
+    * run, as they would one at a time. Once every task has ended, the
+    * failure of the earliest failing node in topological order is rethrown,
+    * so a project fails with the same error whatever the timing. */
   def execute(plan: Plan, outputDir: Option[Path] = None,
               collectCounts: Boolean = false): RunResult = {
-    val frames = scala.collection.mutable.Map[String, DataFrame]()
-    val persisted = scala.collection.mutable.Buffer[DataFrame]()
-    val written = Map.newBuilder[String, Path]
-    val counts = Map.newBuilder[String, Long]
+    val order = plan.dag.topologicalOrder
+    val frames = TrieMap[String, DataFrame]()
+    val persisted = new ConcurrentLinkedQueue[DataFrame]()
+    val written = TrieMap[String, Path]()
+    val counts = TrieMap[String, Long]()
     val outDir = outputDir.getOrElse(Paths.get(plan.project.outputDir))
     val consumers: Map[String, Int] =
       plan.dag.edges.groupBy(_._1).view.mapValues(_.size).toMap.withDefaultValue(0)
+    val sc = spark.sparkContext
 
     // show_progress (node.py:59-60): stage-level progress for the run's span
     val showProgress = Config.bool(plan.project.config, "show_progress") ||
-      plan.dag.topologicalOrder.exists(f => Config.bool(plan.nodeConfig(f), "show_progress"))
+      order.exists(f => Config.bool(plan.nodeConfig(f), "show_progress"))
     val progress: Option[Progress] =
       if (showProgress) {
         val l = new Progress(Console.err) // capture the caller's stderr once
-        spark.sparkContext.addSparkListener(l)
+        sc.addSparkListener(l)
         Some(l)
       } else None
 
-    try plan.dag.topologicalOrder.foreach { full =>
-      val cfg = plan.nodeConfig(full)
-      val section = full.takeWhile(_ != '.')
-      val name = full.drop(section.length + 1)
-      nodeKeys.get(section).foreach { allowed =>
-        (cfg.keySet -- allowed).foreach(k =>
-          Console.err.println(s"[warn] Config `$k` not defined for node `$full`."))
-      }
-      // config errors report where in the YAML they came from: op-level
-      // failures locate the exact `operations[i]` entry, anything else the
-      // node mapping (reference yaml_parser.py:97-111 / error_handler ctx)
-      def located(path: String, e: Exception, what: String = ""): Nothing =
-        throw plan.project.locate(path) match {
-          case Some(loc) => new Engine.LocatedException(s"$loc:$what ${e.getMessage}", e)
-          case None => e
-        }
-      try section match {
-        case "sources" =>
-          frames(full) = postProcess(Sources.read(spark, name, cfg, plan.project.configDir), cfg, full)
-        case "transformations" =>
-          val primary = frames(resolveRef(Config.reqStr(cfg, "source", full)))
-          val result = Config.asList(cfg.getOrElse("operations", Nil)).zipWithIndex.foldLeft(primary) {
-            case (df, (opAny, i)) =>
-              try applyOperation(df, Config.asMap(opAny), frames, full, plan.project.configDir)
-              catch { case e: IllegalArgumentException if !e.isInstanceOf[Engine.LocatedException] =>
-                val opName = Config.str(Config.asMap(opAny), "operation").getOrElse("?")
-                located(s"$full.operations.$i", e, s" operation `$opName`:") }
-          }
-          val post = postProcess(result, cfg, full)
-          frames(full) = if (consumers(full) > 1) { persisted += post; post.persist() } else post
-        case "destinations" =>
-          val src = frames(resolveRef(Config.reqStr(cfg, "source", full)))
-          // name the jobs so progress lines / Spark UI attribute to the node
-          spark.sparkContext.setJobDescription(s"graft: $full")
-          val path = Destinations.write(src, name, cfg, outDir, plan.project.configDir)
-          spark.sparkContext.setJobDescription(null)
-          written += (full -> path)
-      } catch { case e: IllegalArgumentException if !e.isInstanceOf[Engine.LocatedException] =>
-        located(full, e) }
-      if (collectCounts && frames.contains(full))
-        counts += (full -> frames(full).count())
-    } finally {
-      progress.foreach(spark.sparkContext.removeSparkListener)
-      persisted.foreach(_.unpersist(blocking = false))
+    // a task of the node at topological index i tags its jobs with i, so a
+    // failure can cancel exactly the nodes after it
+    val run = s"graft-run-${java.util.UUID.randomUUID()}"
+    val failures = TrieMap[Int, Throwable]()
+    val failedAt = new AtomicInteger(Int.MaxValue)
+    val running = ConcurrentHashMap.newKeySet[Int]()
+    def task(i: Int)(body: => Unit): Runnable = () => {
+      running.add(i)
+      try {
+        if (i > failedAt.get) throw Engine.Skipped
+        sc.addJobTag(s"$run-$i")
+        try body catch { case e: Throwable =>
+          failures.putIfAbsent(i, e)
+          failedAt.accumulateAndGet(i, math.min)
+          running.forEach(j => if (j > i) sc.cancelJobsWithTag(s"$run-$j", s"${order(i)} failed"))
+          throw e
+        } finally sc.removeJobTag(s"$run-$i")
+      } finally running.remove(i)
     }
-    RunResult(written.result(), counts.result())
+
+    val threads = new ConcurrentLinkedQueue[Thread]()
+    val width = math.max(1, math.min(order.size, graft.Session.cpus.toInt))
+    val pool = new ThreadPoolExecutor(width, width, 0L, TimeUnit.MILLISECONDS,
+      new LinkedBlockingQueue[Runnable](), { (r: Runnable) =>
+        val t = new Thread(r, s"graft-node-${threads.size}")
+        t.setDaemon(true)
+        threads.add(t)
+        t
+      })
+    try {
+      pool.prestartAllCoreThreads()
+      val defined = scala.collection.mutable.Map[String, CompletableFuture[Void]]()
+      val tasks = Seq.newBuilder[CompletableFuture[Void]]
+      order.zipWithIndex.foreach { case (full, i) =>
+        val preds = plan.dag.predecessors(full).toSeq.map(defined)
+        val persist = full.startsWith("transformations.") && consumers(full) > 1
+        val node = CompletableFuture.allOf(preds: _*).thenRunAsync(task(i) {
+          defineNode(plan, full, frames, written, outDir)
+          if (persist) persisted.add(frames(full).persist())
+        }, pool)
+        tasks += node
+        defined(full) = node
+        if (collectCounts && !full.startsWith("destinations.")) {
+          val count = node.thenRunAsync(task(i) { counts(full) = frames(full).count() }, pool)
+          tasks += count
+          // the count fills a fan-out cache; consumers that started before
+          // it would each fill it again
+          if (persist) defined(full) = count
+        }
+      }
+      // allOf completes once every task has ended: defined, failed or skipped
+      CompletableFuture.allOf(tasks.result(): _*).handle((_: Void, _: Throwable) => null).join()
+    } finally {
+      pool.shutdown()
+      threads.forEach(_.join())
+      progress.foreach(sc.removeSparkListener)
+      persisted.forEach(_.unpersist(blocking = false))
+    }
+    failures.get(failedAt.get).foreach(e => throw e)
+    RunResult(SeqMap.from(order.flatMap(n => written.get(n).map(n -> _))), counts.toMap)
+  }
+
+  /** Define one node: a source or transformation builds its frame (with its
+    * eager jobs: header reads, graph iterations, expect/require_rows), a
+    * destination writes. Config errors carry their YAML location. */
+  private def defineNode(plan: Plan, full: String, frames: TrieMap[String, DataFrame],
+                         written: TrieMap[String, Path], outDir: Path): Unit = {
+    val cfg = plan.nodeConfig(full)
+    val section = full.takeWhile(_ != '.')
+    val name = full.drop(section.length + 1)
+    nodeKeys.get(section).foreach { allowed =>
+      (cfg.keySet -- allowed).foreach(k =>
+        Console.err.println(s"[warn] Config `$k` not defined for node `$full`."))
+    }
+    // config errors report where in the YAML they came from: op-level
+    // failures locate the exact `operations[i]` entry, anything else the
+    // node mapping (reference yaml_parser.py:97-111 / error_handler ctx)
+    def located(path: String, e: Exception, what: String = ""): Nothing =
+      throw plan.project.locate(path) match {
+        case Some(loc) => new Engine.LocatedException(s"$loc:$what ${e.getMessage}", e)
+        case None => e
+      }
+    try section match {
+      case "sources" =>
+        frames(full) = postProcess(Sources.read(spark, name, cfg, plan.project.configDir), cfg, full)
+      case "transformations" =>
+        val primary = frames(resolveRef(Config.reqStr(cfg, "source", full)))
+        val result = Config.asList(cfg.getOrElse("operations", Nil)).zipWithIndex.foldLeft(primary) {
+          case (df, (opAny, i)) =>
+            try applyOperation(df, Config.asMap(opAny), frames, full, plan.project.configDir)
+            catch { case e: IllegalArgumentException if !e.isInstanceOf[Engine.LocatedException] =>
+              val opName = Config.str(Config.asMap(opAny), "operation").getOrElse("?")
+              located(s"$full.operations.$i", e, s" operation `$opName`:") }
+        }
+        frames(full) = postProcess(result, cfg, full)
+      case "destinations" =>
+        val src = frames(resolveRef(Config.reqStr(cfg, "source", full)))
+        // name the jobs so progress lines / Spark UI attribute to the node
+        spark.sparkContext.setJobDescription(s"graft: $full")
+        try written(full) = Destinations.write(src, name, cfg, outDir, plan.project.configDir)
+        finally spark.sparkContext.setJobDescription(null)
+    } catch { case e: IllegalArgumentException if !e.isInstanceOf[Engine.LocatedException] =>
+      located(full, e) }
   }
 
   /** Node-level cross-cutting config: expect / require_rows / repartition /

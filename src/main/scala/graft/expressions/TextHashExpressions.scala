@@ -328,6 +328,8 @@ object GraftFunctions {
   // entry point for safety, and re-registering the same names spams one
   // SimpleFunctionRegistry "replaced a previously registered function" WARN
   // per function per call. Weak keys: a retired session must not be pinned.
+  // A session is marked only once its functions are in its registry, so a
+  // caller that finds the mark can resolve every name.
   private val registered =
     java.util.Collections.synchronizedMap(
       new java.util.WeakHashMap[SparkSession, java.lang.Boolean])
@@ -337,15 +339,20 @@ object GraftFunctions {
     * session AND per registry: a cloned session (streaming micro-batches,
     * newSession()) copies the parent's temp functions, so the probe skips
     * re-registering — re-registration is harmless but WARNs "replaced a
-    * previously registered function" once per function per call. */
+    * previously registered function" once per function per call. Safe from
+    * concurrent threads: the first registers under the map's lock, and the
+    * others wait for it to finish. */
   def register(spark: SparkSession): Unit =
-    if (registered.putIfAbsent(spark, java.lang.Boolean.TRUE) == null) {
-      val reg = spark.sessionState.functionRegistry
-      val probe = org.apache.spark.sql.catalyst.FunctionIdentifier(all.head._1)
-      if (!reg.functionExists(probe))
-        all.foreach { case (name, _, builder) =>
-          reg.createOrReplaceTempFunction(name, builder, "built-in")
-        }
+    if (!registered.containsKey(spark)) registered.synchronized {
+      if (!registered.containsKey(spark)) {
+        val reg = spark.sessionState.functionRegistry
+        val probe = org.apache.spark.sql.catalyst.FunctionIdentifier(all.head._1)
+        if (!reg.functionExists(probe))
+          all.foreach { case (name, _, builder) =>
+            reg.createOrReplaceTempFunction(name, builder, "built-in")
+          }
+        registered.put(spark, java.lang.Boolean.TRUE)
+      }
     }
 
   /** Register a CONTENT-KEYED temp function only when absent: callers name

@@ -171,4 +171,27 @@ class CliSpec extends SparkSpec {
     assert(Main.dispatch(Array("frobnicate")) == 1)
     assert(Main.dispatch(Array("run", "--bogus")) == 1)
   }
+
+  test("run prints its node -> path lines in topological order") {
+    // five destinations: more than a small Map keeps in insertion order
+    val dir = writeProject()
+    val names = Seq("alpha", "bravo", "charlie", "delta", "echo")
+    Files.writeString(dir.resolve("five.yaml"),
+      s"""version: 2
+         |config:
+         |  output_dir: ${dir.resolve("out5")}
+         |sources:
+         |  people:
+         |    file: ${dir.resolve("people.csv")}
+         |destinations:
+         |""".stripMargin + names.map(n =>
+        s"  $n:\n    source: $$sources.people\n    extension: jsonl\n").mkString)
+    val out = new java.io.ByteArrayOutputStream()
+    val code = Console.withOut(new java.io.PrintStream(out, true)) {
+      Main.dispatch(Array("run", "-c", dir.resolve("five.yaml").toString))
+    }
+    assert(code == 0)
+    val printed = out.toString("UTF-8").linesIterator.filter(_.contains(" -> ")).toSeq
+    assert(printed == names.map(n => s"destinations.$n -> ${dir.resolve("out5").resolve(s"$n.jsonl")}"))
+  }
 }

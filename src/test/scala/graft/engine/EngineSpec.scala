@@ -957,4 +957,190 @@ class EngineSpec extends SparkSpec {
     assert(Sources.flattenHeaders(rows) ==
       Seq("Student__id", "name", "School__id", "year"))
   }
+
+  // ---------------------------------------------- concurrent execution
+  // execute runs each node on a per-run driver pool as soon as its
+  // predecessors are defined; these pin what a caller can rely on.
+
+  private def livePoolThreads(): Set[String] =
+    Thread.getAllStackTraces.keySet.asScala.map(_.getName).filter(_.startsWith("graft-node-")).toSet
+
+  test("concurrent execute: a fan-out project gives the same outputs and -r counts") {
+    val dir = writeProject()
+    val outDir = dir.resolve("out-counts")
+    spark.catalog.clearCache()
+    val engine = new Engine(spark)
+    val project = Config.load(dir.resolve("project.yaml").toString, Map("OUT_DIR" -> outDir.toString))
+    val result = engine.execute(engine.compile(project), collectCounts = true)
+    assert(result.rowCounts == Map("sources.animals" -> 4L, "sources.zoos" -> 3L,
+      "transformations.cats" -> 2L, "transformations.zoo_animals" -> 1L))
+    assert(result.written.keys.toSeq == Seq("destinations.cats", "destinations.zoo_summary"))
+    assert(Files.readAllLines(outDir.resolve("cats.jsonl")).asScala.toList.sorted == List(
+      """{"name": "cheetah", "weight": 50, "heavy": "no"}""",
+      """{"name": "lion", "weight": 190, "heavy": "yes"}"""))
+    val summary = Files.readAllLines(outDir.resolve("zoo_summary.jsonl")).asScala.toList
+    assert(summary.size == 1 && summary.head.contains(""""n_animals": "2""""))
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
+  /** Two independent failing branches off one source: `a_bad` (first in
+    * topological order) fails only after a Spark job, `b_bad` at once on
+    * a config error at line 14. `a_shared` fans out to two
+    * destinations, so the run persists it. */
+  private def twoFailingBranches(): java.nio.file.Path = {
+    val dir = Files.createTempDirectory("graft-fail2")
+    Files.writeString(dir.resolve("d.csv"), "a\n1\n2\n")
+    Files.writeString(dir.resolve("p.yaml"),
+      """version: 2
+        |sources:
+        |  d:
+        |    file: d.csv
+        |transformations:
+        |  a_bad:
+        |    source: $sources.d
+        |    require_rows: 100
+        |  b_bad:
+        |    source: $sources.d
+        |    operations:
+        |      - operation: rename_columns
+        |        columns: {a: b}
+        |      - operation: filter_rows
+        |        behavior: include
+        |  a_shared:
+        |    source: $sources.d
+        |destinations:
+        |  a_out:
+        |    source: $transformations.a_bad
+        |  b_out:
+        |    source: $transformations.b_bad
+        |  s1:
+        |    source: $transformations.a_shared
+        |  s2:
+        |    source: $transformations.a_shared
+        |""".stripMargin)
+    dir
+  }
+
+  test("concurrent execute: of two failing branches the earliest in topological order is reported") {
+    val dir = twoFailingBranches()
+    val engine = new Engine(spark)
+    val plan = engine.compile(Config.load(dir.resolve("p.yaml").toString))
+    assert(plan.dag.topologicalOrder.indexOf("transformations.a_bad") <
+      plan.dag.topologicalOrder.indexOf("transformations.b_bad"))
+    // b_bad fails at once, a_bad only after its count job; b_bad's failure
+    // neither cancels nor skips a_bad, whose failure is the one reported
+    (1 to 3).foreach { _ =>
+      val e = intercept[IllegalStateException](engine.execute(plan, Some(dir.resolve("o"))))
+      assert(e.getMessage == "transformations.a_bad: requires at least 100 rows but has 2")
+    }
+    // with a_bad fixed, b_bad's located config error is reported
+    val project = Config.load(dir.resolve("p.yaml").toString)
+    val fixed = project.copy(raw = Config.setPath(project.raw, "transformations.a_bad.require_rows", "1"))
+    val e = intercept[IllegalArgumentException](
+      engine.execute(engine.compile(fixed), Some(dir.resolve("o"))))
+    assert(e.getMessage.startsWith("p.yaml:14: operation `filter_rows`:"), e.getMessage)
+  }
+
+  test("concurrent execute: a failed run leaves no pool thread, persist or job description") {
+    val dir = twoFailingBranches()
+    spark.catalog.clearCache()
+    spark.sparkContext.setJobDescription(null)
+    intercept[IllegalStateException](
+      new Engine(spark).run(dir.resolve("p.yaml").toString, outputDir = Some(dir.resolve("o"))))
+    assert(livePoolThreads().isEmpty)
+    assert(spark.sharedState.cacheManager.isEmpty)
+    assert(spark.sparkContext.getLocalProperty("spark.job.description") == null)
+  }
+
+  test("a failing destination write leaves the caller's job description unset") {
+    val dir = Files.createTempDirectory("graft-faildest")
+    Files.writeString(dir.resolve("d.csv"), "a\n1\n")
+    Files.writeString(dir.resolve("p.yaml"),
+      """version: 2
+        |sources:
+        |  d:
+        |    file: d.csv
+        |destinations:
+        |  out:
+        |    source: $sources.d
+        |    template: missing.jsont
+        |""".stripMargin)
+    spark.sparkContext.setJobDescription(null)
+    intercept[Exception](
+      new Engine(spark).run(dir.resolve("p.yaml").toString, outputDir = Some(dir.resolve("o"))))
+    assert(spark.sparkContext.getLocalProperty("spark.job.description") == null)
+  }
+
+  test("concurrent execute: [warn] lines from pool threads reach Console.withErr") {
+    val dir = Files.createTempDirectory("graft-warn")
+    Files.writeString(dir.resolve("d.csv"), "a\n1\n")
+    Files.writeString(dir.resolve("p.yaml"),
+      """version: 2
+        |sources:
+        |  d:
+        |    file: d.csv
+        |transformations:
+        |  t:
+        |    source: $sources.d
+        |    bogus_node_key: 1
+        |    operations:
+        |      - operation: rename_columns
+        |        columns: {a: b}
+        |        bogus_op_key: 2
+        |destinations:
+        |  out:
+        |    source: $transformations.t
+        |""".stripMargin)
+    val err = new java.io.ByteArrayOutputStream()
+    Console.withErr(new java.io.PrintStream(err, true)) {
+      new Engine(spark).run(dir.resolve("p.yaml").toString, outputDir = Some(dir.resolve("o")))
+    }
+    val text = err.toString("UTF-8")
+    assert(text.contains("[warn] Config `bogus_node_key` not defined for node `transformations.t`."), text)
+    assert(text.contains("[warn] Config `bogus_op_key` not defined for operation `rename_columns`"), text)
+  }
+
+  test("compile orders an nb_classify after the nb_train that writes its model_file") {
+    // a_score sorts before b_train, so only the model_file edge puts the
+    // trainer first
+    val dir = Files.createTempDirectory("graft-nbedge")
+    val rows = (0 until 20).map { i =>
+      val (label, text) = if (i % 2 == 0) ("code", "def return import class")
+                          else ("prose", "once upon a time the story")
+      s"""{"id": $i, "label": "$label", "text": "doc $i $text"}"""
+    }
+    Files.write(dir.resolve("docs.jsonl"), rows.asJava)
+    Files.writeString(dir.resolve("p.yaml"),
+      """version: 2
+        |sources:
+        |  docs:
+        |    file: docs.jsonl
+        |transformations:
+        |  a_score:
+        |    source: $sources.docs
+        |    operations:
+        |      - operation: nb_classify
+        |        column: text
+        |        model_file: ./models/../nb.model
+        |        new_column: pred
+        |      - operation: filter_rows
+        |        query: pred == label
+        |        behavior: include
+        |  b_train:
+        |    source: $sources.docs
+        |    operations:
+        |      - operation: nb_train
+        |        column: text
+        |        label_column: label
+        |        model_file: nb.model
+        |destinations:
+        |  scored:
+        |    source: $transformations.a_score
+        |""".stripMargin)
+    val plan = Engine.compile(Config.load(dir.resolve("p.yaml").toString))
+    assert(plan.dag.edges.contains("transformations.b_train" -> "transformations.a_score"))
+    val out = dir.resolve("o")
+    new Engine(spark).execute(plan, Some(out))
+    assert(Files.readAllLines(out.resolve("scored.jsonl")).size == 20)
+  }
 }

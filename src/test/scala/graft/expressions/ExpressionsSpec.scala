@@ -188,4 +188,27 @@ class ExpressionsSpec extends SparkSpec {
     assert(plan.contains("*(1) Project") && plan.contains("cosine_sim"),
       s"cosine_sim must sit inside a whole-stage-codegen'd (starred) projection:\n$plan")
   }
+
+  test("register is safe from concurrent threads: every name resolves once it returns") {
+    // 8 threads register on a fresh session at once and immediately
+    // resolve every function: none may see the session marked before its
+    // functions are in the registry
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    try (1 to 20).foreach { _ =>
+      val fresh = spark.newSession()
+      val start = new java.util.concurrent.CountDownLatch(1)
+      val missing = (1 to 8).map { _ =>
+        pool.submit(new java.util.concurrent.Callable[Seq[String]] {
+          def call(): Seq[String] = {
+            start.await()
+            GraftFunctions.register(fresh)
+            GraftFunctions.all.map(_._1).filterNot(n => fresh.sessionState.functionRegistry
+              .functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(n)))
+          }
+        })
+      }
+      start.countDown()
+      missing.foreach(f => assert(f.get().isEmpty, s"unresolved after register: ${f.get()}"))
+    } finally pool.shutdown()
+  }
 }
