@@ -116,9 +116,11 @@ final class Engine(spark: SparkSession) {
     * `collectCounts` additionally row-counts every node (the reference's
     * --results-file epilogue, earthmover.py:409-419) — extra actions, each
     * its own task, so off by default. A transformation with more than one
-    * consumer is persisted for the run and released when it ends; under
-    * `collectCounts` its consumers start after its count has filled the
-    * cache.
+    * consumer is persisted for the run; under `collectCounts` its consumers
+    * start after its count has filled the cache. The run is one
+    * [[graft.Persisted]] scope, opened before the pool so its workers
+    * inherit it: those persists, and every cache an operator persists for
+    * a frame it returns, are released when the run ends.
     *
     * When a node fails, the jobs of running nodes after it in topological
     * order are cancelled and no node after it starts; nodes before it still
@@ -129,7 +131,6 @@ final class Engine(spark: SparkSession) {
               collectCounts: Boolean = false): RunResult = {
     val order = plan.dag.topologicalOrder
     val frames = TrieMap[String, DataFrame]()
-    val persisted = new ConcurrentLinkedQueue[DataFrame]()
     val written = TrieMap[String, Path]()
     val counts = TrieMap[String, Long]()
     val outDir = outputDir.getOrElse(Paths.get(plan.project.outputDir))
@@ -167,43 +168,44 @@ final class Engine(spark: SparkSession) {
       } finally running.remove(i)
     }
 
-    val threads = new ConcurrentLinkedQueue[Thread]()
-    val width = math.max(1, math.min(order.size, graft.Session.cpus.toInt))
-    val pool = new ThreadPoolExecutor(width, width, 0L, TimeUnit.MILLISECONDS,
-      new LinkedBlockingQueue[Runnable](), { (r: Runnable) =>
-        val t = new Thread(r, s"graft-node-${threads.size}")
-        t.setDaemon(true)
-        threads.add(t)
-        t
-      })
-    try {
-      pool.prestartAllCoreThreads()
-      val defined = scala.collection.mutable.Map[String, CompletableFuture[Void]]()
-      val tasks = Seq.newBuilder[CompletableFuture[Void]]
-      order.zipWithIndex.foreach { case (full, i) =>
-        val preds = plan.dag.predecessors(full).toSeq.map(defined)
-        val persist = full.startsWith("transformations.") && consumers(full) > 1
-        val node = CompletableFuture.allOf(preds: _*).thenRunAsync(task(i) {
-          defineNode(plan, full, frames, written, outDir)
-          if (persist) persisted.add(frames(full).persist())
-        }, pool)
-        tasks += node
-        defined(full) = node
-        if (collectCounts && !full.startsWith("destinations.")) {
-          val count = node.thenRunAsync(task(i) { counts(full) = frames(full).count() }, pool)
-          tasks += count
-          // the count fills a fan-out cache; consumers that started before
-          // it would each fill it again
-          if (persist) defined(full) = count
+    graft.Persisted.scope {
+      val threads = new ConcurrentLinkedQueue[Thread]()
+      val width = math.max(1, math.min(order.size, graft.Session.cpus.toInt))
+      val pool = new ThreadPoolExecutor(width, width, 0L, TimeUnit.MILLISECONDS,
+        new LinkedBlockingQueue[Runnable](), { (r: Runnable) =>
+          val t = new Thread(r, s"graft-node-${threads.size}")
+          t.setDaemon(true)
+          threads.add(t)
+          t
+        })
+      try {
+        pool.prestartAllCoreThreads()
+        val defined = scala.collection.mutable.Map[String, CompletableFuture[Void]]()
+        val tasks = Seq.newBuilder[CompletableFuture[Void]]
+        order.zipWithIndex.foreach { case (full, i) =>
+          val preds = plan.dag.predecessors(full).toSeq.map(defined)
+          val persist = full.startsWith("transformations.") && consumers(full) > 1
+          val node = CompletableFuture.allOf(preds: _*).thenRunAsync(task(i) {
+            defineNode(plan, full, frames, written, outDir)
+            if (persist) graft.Persisted.persist(frames(full))
+          }, pool)
+          tasks += node
+          defined(full) = node
+          if (collectCounts && !full.startsWith("destinations.")) {
+            val count = node.thenRunAsync(task(i) { counts(full) = frames(full).count() }, pool)
+            tasks += count
+            // the count fills a fan-out cache; consumers that started before
+            // it would each fill it again
+            if (persist) defined(full) = count
+          }
         }
+        // allOf completes once every task has ended: defined, failed or skipped
+        CompletableFuture.allOf(tasks.result(): _*).handle((_: Void, _: Throwable) => null).join()
+      } finally {
+        pool.shutdown()
+        threads.forEach(_.join())
+        progress.foreach(sc.removeSparkListener)
       }
-      // allOf completes once every task has ended: defined, failed or skipped
-      CompletableFuture.allOf(tasks.result(): _*).handle((_: Void, _: Throwable) => null).join()
-    } finally {
-      pool.shutdown()
-      threads.forEach(_.join())
-      progress.foreach(sc.removeSparkListener)
-      persisted.forEach(_.unpersist(blocking = false))
     }
     failures.get(failedAt.get).foreach(e => throw e)
     RunResult(SeqMap.from(order.flatMap(n => written.get(n).map(n -> _))), counts.toMap)

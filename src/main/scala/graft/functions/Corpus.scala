@@ -3,6 +3,7 @@ package graft.functions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StringType}
+import graft.Persisted
 
 /**
  * Corpus-cleaning operators for large-scale training-data pipelines — the
@@ -246,7 +247,7 @@ object Corpus {
   def tfidfTopTerms(df: DataFrame, idCol: String, textCol: String,
                     k: Int = 5): DataFrame = {
     val n = df.count()
-    val tf = termFrequencies(df, idCol, textCol).persist() // feeds df-agg AND join
+    val tf = Persisted.persist(termFrequencies(df, idCol, textCol)) // feeds df-agg AND join
     val dfreq = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val w = org.apache.spark.sql.expressions.Window.partitionBy("id")
       .orderBy(col("tf").desc, col("df").asc, col("term").asc)

@@ -3,6 +3,7 @@ package graft.functions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
+import graft.Persisted
 
 /**
  * Deduplication operators for training-data pipelines, in increasing
@@ -114,10 +115,10 @@ object Dedup {
     }
     // One groupBy rebuilds the per-doc CAPPED token array in global (hash)
     // order, carrying the uncapped count n for the union denominator.
-    // persist: feeds the prefix index AND both sides of the verify join.
-    val docsKept = posting.groupBy("id")
-      .agg(sort_array(collect_list(col("tok"))).as("ktoks"), max(col("n")).as("n"))
-      .persist()
+    // persist: feeds the prefix index AND both sides of the verify join;
+    // released by the caller's Persisted scope
+    val docsKept = Persisted.persist(posting.groupBy("id")
+      .agg(sort_array(collect_list(col("tok"))).as("ktoks"), max(col("n")).as("n")))
     val prefix = docsKept.select(col("id"), col("n"),
         explode(slice(col("ktoks"), lit(1),
           greatest(size(col("ktoks")) - ceil(lit(threshold) * size(col("ktoks"))).cast("int") + 1,
@@ -178,10 +179,9 @@ object Dedup {
       case None => post0
     }
     // persist: feeds the prefix index AND both sides of the verify join
-    // (the jaccardPairs lifecycle — released with the session/GC)
-    val docsKept = posting.groupBy("side", "id")
-      .agg(sort_array(collect_list(col("tok"))).as("ktoks"), max(col("n")).as("n"))
-      .persist()
+    // (the jaccardPairs lifecycle — released by the caller's Persisted scope)
+    val docsKept = Persisted.persist(posting.groupBy("side", "id")
+      .agg(sort_array(collect_list(col("tok"))).as("ktoks"), max(col("n")).as("n")))
     val prefix = docsKept.select(col("side"), col("id"), col("n"),
         explode(slice(col("ktoks"), lit(1),
           greatest(size(col("ktoks")) - ceil(lit(threshold) * size(col("ktoks"))).cast("int") + 1,
@@ -315,10 +315,9 @@ object Dedup {
           .select("id", "n", "is_new", "tok")
       case None => posting0
     }
-    val docsKept = posting.groupBy("id")
+    val docsKept = Persisted.persist(posting.groupBy("id")
       .agg(sort_array(collect_list(col("tok"))).as("ktoks"), max(col("n")).as("n"),
-        first(col("is_new")).as("is_new"))
-      .persist()
+        first(col("is_new")).as("is_new")))
     val prefix = docsKept.select(col("id"), col("n"), col("is_new"),
       explode(slice(col("ktoks"), lit(1),
         greatest(size(col("ktoks")) - ceil(lit(threshold) * size(col("ktoks"))).cast("int") + 1,
@@ -396,7 +395,7 @@ object Dedup {
     // batch side: small by the daily-delta contract — cache it (it feeds
     // the probe count, the prefix index and the verify lookup); corpus
     // side: recomputed narrowly per pass, never cached
-    val batchKept = kept(batchDocs, isNew = true).persist()
+    val batchKept = Persisted.persist(kept(batchDocs, isNew = true))
     val allKept = batchKept.unionByName(kept(corpusDocs, isNew = false))
     def prefixOf(df: DataFrame): DataFrame =
       df.select(col("id"), col("n"), col("is_new"),
@@ -543,9 +542,9 @@ object Dedup {
                       shingleSize: Int = 3): DataFrame = {
     require(numHashes % bands == 0, "numHashes must divide into bands")
     val rowsPerBand = numHashes / bands
-    val docs = docSignatures(df, idCol, textCol, numHashes, shingleSize)
-      .filter(size(col("toks")) > 0)
-      .persist() // sig+toks feed band keys AND both sides of the verify join
+    // sig+toks feed band keys AND both sides of the verify join
+    val docs = Persisted.persist(docSignatures(df, idCol, textCol, numHashes, shingleSize)
+      .filter(size(col("toks")) > 0))
 
     val bandKeys = docs.select(col("id"),
       posexplode(transform(sequence(lit(0), lit(bands - 1)),
@@ -625,8 +624,8 @@ object Dedup {
     * `maxHamming`. */
   def simhashPairs(df: DataFrame, idCol: String, textCol: String, maxHamming: Int = 3,
                    shingleSize: Int = 3): DataFrame = {
-    val docs = simhashSignatures(df, idCol, textCol, shingleSize)
-      .persist() // the signature feeds both sides of the band self-join
+    // the signature feeds both sides of the band self-join
+    val docs = Persisted.persist(simhashSignatures(df, idCol, textCol, shingleSize))
     val banded = docs.select(col("id"), col("sig"),
       posexplode(transform(sequence(lit(0), lit(3)),
         b => call_function("shiftright", col("sig"), b * 16).bitwiseAND(0xFFFFL))).as(Seq("band", "chunk")))
@@ -713,7 +712,9 @@ object Dedup {
     // every round, so persist it
     val pp = p.persist()
     val edges = pp.union(pp.select(col("dst").as("src"), col("src").as("dst")))
-    var labels = ids.select(col("id"), col("id").as("label")).persist()
+    // each round's labels are released when the next round supersedes
+    // them; the returned (last) round's by the caller's Persisted scope
+    var labels = Persisted.persist(ids.select(col("id"), col("id").as("label")))
     // labels only ever DECREASE, so the label sum strictly decreases until
     // the fixed point — one cheap agg action per round detects convergence
     // (no extra join against the previous round's labels)
@@ -727,9 +728,8 @@ object Dedup {
     while (!converged && iter < maxIterations) {
       val propagated = edges.join(labels, edges("src") === labels("id"))
         .select(col("dst").as("id"), col("label"))
-      var next = labels.select("id", "label").union(propagated)
-        .groupBy("id").agg(min(col("label")).as("label"))
-        .persist()
+      var next = Persisted.persist(labels.select("id", "label").union(propagated)
+        .groupBy("id").agg(min(col("label")).as("label")))
       // the logical plan nests one join+agg deeper per round even though the
       // data is cached — on high-diameter graphs analyzer/optimizer time
       // grows superlinearly with plan depth. Cut the lineage periodically:

@@ -189,7 +189,7 @@ object ScaleProbe {
           s"indexed incremental kept $incrIdxKept != text path $incrKept")
       // the streaming-production shape of the same leg: index on DISK
       // (parquet, re-read per delta — exactly what the stream-ingest
-      // faces' existingIndex does), not pre-cached in executor memory.
+      // faces' index read does), not pre-cached in executor memory.
       // This is the regime the fused-vs-narrow strategy crossover is
       // about: the fused path re-shuffles + re-caches the scanned index
       // per delta, the narrow path scans it twice and shuffles nothing

@@ -9,6 +9,15 @@ import org.scalatest.BeforeAndAfterAll
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   override def afterAll(): Unit = () // shared session, never stop per-suite
+
+  /** (CacheManager entries, persistent RDDs). The session is shared, so a
+    * spec that must leave no cache behind compares this before and after. */
+  def cacheFootprint: (Int, Int) = {
+    val cm = spark.sharedState.cacheManager
+    // numCachedEntries is private[sql] to scalac but public in the bytecode
+    (cm.getClass.getMethod("numCachedEntries").invoke(cm).asInstanceOf[Int],
+      spark.sparkContext.getPersistentRDDs.size)
+  }
 }
 
 object SparkSpec {

@@ -1021,6 +1021,27 @@ class EngineSpec extends SparkSpec {
     dir
   }
 
+  /** Runs `body` and counts the ERROR events the FileFormatWriter logger
+    * lets through meanwhile. */
+  private def fileFormatWriterErrors(body: => Unit): Int = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val appender = new AbstractAppender("ffw-errors", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel == Level.ERROR && e.getLoggerName.endsWith(".FileFormatWriter"))
+          n.incrementAndGet()
+    }
+    appender.start()
+    val root = LogManager.getContext(false).asInstanceOf[LoggerContext].getRootLogger
+    root.addAppender(appender)
+    // left started once removed: a task thread may still hold it
+    try body finally root.removeAppender(appender)
+    n.get
+  }
+
   test("concurrent execute: of two failing branches the earliest in topological order is reported") {
     val dir = twoFailingBranches()
     val engine = new Engine(spark)
@@ -1028,11 +1049,15 @@ class EngineSpec extends SparkSpec {
     assert(plan.dag.topologicalOrder.indexOf("transformations.a_bad") <
       plan.dag.topologicalOrder.indexOf("transformations.b_bad"))
     // b_bad fails at once, a_bad only after its count job; b_bad's failure
-    // neither cancels nor skips a_bad, whose failure is the one reported
-    (1 to 3).foreach { _ =>
-      val e = intercept[IllegalStateException](engine.execute(plan, Some(dir.resolve("o"))))
-      assert(e.getMessage == "transformations.a_bad: requires at least 100 rows but has 2")
+    // neither cancels nor skips a_bad, whose failure is the one reported.
+    // The writes the failure cancels log no "Aborting job" trace ahead of it.
+    val writerErrors = fileFormatWriterErrors {
+      (1 to 3).foreach { _ =>
+        val e = intercept[IllegalStateException](engine.execute(plan, Some(dir.resolve("o"))))
+        assert(e.getMessage == "transformations.a_bad: requires at least 100 rows but has 2")
+      }
     }
+    assert(writerErrors == 0)
     // with a_bad fixed, b_bad's located config error is reported
     val project = Config.load(dir.resolve("p.yaml").toString)
     val fixed = project.copy(raw = Config.setPath(project.raw, "transformations.a_bad.require_rows", "1"))
@@ -1050,6 +1075,38 @@ class EngineSpec extends SparkSpec {
     assert(livePoolThreads().isEmpty)
     assert(spark.sharedState.cacheManager.isEmpty)
     assert(spark.sparkContext.getLocalProperty("spark.job.description") == null)
+  }
+
+  test("execute releases the caches operators persist: dedup_near jaccard leaves none") {
+    // jaccardPairs persists its per-doc token frame for the lazy frame it
+    // returns; the run's persist scope releases it when the run ends
+    val dir = Files.createTempDirectory("graft-dedup-cache")
+    Files.writeString(dir.resolve("docs.csv"), (1 to 8).map(i =>
+      s"$i,near duplicate document body ${i % 4} with plenty of distinct words ${i % 4}")
+      .mkString("doc_id,text\n", "\n", "\n"))
+    Files.writeString(dir.resolve("p.yaml"),
+      """version: 2
+        |sources:
+        |  docs:
+        |    file: docs.csv
+        |transformations:
+        |  kept:
+        |    source: $sources.docs
+        |    operations:
+        |      - operation: dedup_near
+        |        id_column: doc_id
+        |        column: text
+        |        method: jaccard
+        |        threshold: 0.7
+        |destinations:
+        |  kept:
+        |    source: $transformations.kept
+        |    extension: jsonl
+        |""".stripMargin)
+    spark.catalog.clearCache()
+    new Engine(spark).run(dir.resolve("p.yaml").toString, outputDir = Some(dir.resolve("o")))
+    assert(Files.readAllLines(dir.resolve("o").resolve("kept.jsonl")).size == 4)
+    assert(spark.sharedState.cacheManager.isEmpty)
   }
 
   test("a failing destination write leaves the caller's job description unset") {

@@ -435,6 +435,7 @@ class SketchesSpec extends SparkSpec {
     val rows = (0 until 5000).map(i => (s"g${i % 3}", (i % 700).toLong)).toDF("g", "k")
     rows.filter(col("k") % 2 === 0).write.parquet(s"$dir/src")
     val src = spark.readStream.schema(rows.schema).parquet(s"$dir/src")
+    val cached = cacheFootprint
     def run() = graft.streaming.Streams.sketchDistinctIngest(src, Seq("g"), "k",
       precision = 10, s"$dir/sk", checkpointDir = s"$dir/ckpt")
     val q = run(); try q.processAllAvailable() finally q.stop()
@@ -449,6 +450,7 @@ class SketchesSpec extends SparkSpec {
     assert(new java.io.File(s"$dir/sk").list().count(_.startsWith("batch=")) === 2)
     // restart on the same checkpoint with no new data: totals unchanged
     val q3 = run(); try q3.processAllAvailable() finally q3.stop()
+    assert(cacheFootprint == cached, "the ingest must release every cache it created")
     assert(totals() === t1)
   }
 

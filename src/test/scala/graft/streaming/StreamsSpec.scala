@@ -202,6 +202,7 @@ class StreamsSpec extends SparkSpec {
     val delta2 = Seq((12L, doc(2)), (13L, "completely different novel content here"))
 
     val mem = MemoryStream[(Long, String)]
+    val cached = cacheFootprint
     val q = Streams.incrementalDedupIngest(mem.toDF().toDF("doc_id", "text"),
       "doc_id", "text", idxDir, outDir, threshold = 0.7, checkpointDir = ckpt)
     try {
@@ -210,6 +211,7 @@ class StreamsSpec extends SparkSpec {
       mem.addData(delta2: _*)
       q.processAllAvailable()
     } finally q.stop()
+    assert(cacheFootprint == cached, "the ingest must release every cache it created")
     val streamKept = spark.read.parquet(outDir).select("doc_id")
       .as[Long].collect().sorted.toSeq
 
@@ -251,6 +253,7 @@ class StreamsSpec extends SparkSpec {
       render(13L, "completely different novel content here", "docx"),
       (14L, "not a document at all".getBytes))
     val mem = MemoryStream[(Long, Array[Byte])]
+    val cached = cacheFootprint
     val q = Streams.incrementalDocDedupIngest(mem.toDF().toDF("doc_id", "content"),
       "doc_id", "content", s"$dir/index", s"$dir/out", threshold = 0.7,
       checkpointDir = s"$dir/ckpt")
@@ -260,6 +263,7 @@ class StreamsSpec extends SparkSpec {
       mem.addData(delta2: _*)
       q.processAllAvailable()
     } finally q.stop()
+    assert(cacheFootprint == cached, "the ingest must release every cache it created")
     val kept = spark.read.parquet(s"$dir/out").select("doc_id")
       .as[Long].collect().sorted.toSeq
     assert(kept == (1L to 10L) :+ 13L, kept.toString)
@@ -278,6 +282,7 @@ class StreamsSpec extends SparkSpec {
     val delta2 = Seq(103L, 50L)
     def payload(id: Long) = (id, GenMedia.videoDedupFixture(id))
     val mem = MemoryStream[(Long, Array[Byte])]
+    val cached = cacheFootprint
     val q = Streams.incrementalVideoDedupIngest(mem.toDF().toDF("media_id", "content"),
       "media_id", "content", idxDir, outDir, maxHamming = 3, maxFrames = 4,
       minMatches = 2, checkpointDir = ckpt)
@@ -287,6 +292,7 @@ class StreamsSpec extends SparkSpec {
       mem.addData(delta2.map(payload): _*)
       q.processAllAvailable()
     } finally q.stop()
+    assert(cacheFootprint == cached, "the ingest must release every cache it created")
     val kept = spark.read.parquet(outDir).select("media_id")
       .as[Long].collect().sorted.toSeq
     assert(kept == Seq(0L, 1L, 2L, 3L, 4L, 50L),
@@ -312,6 +318,7 @@ class StreamsSpec extends SparkSpec {
     def payload(id: Long) = (id, GenImages.dedupFixture(id))
 
     val mem = MemoryStream[(Long, Array[Byte])]
+    val cached = cacheFootprint
     val q = Streams.incrementalImageDedupIngest(mem.toDF().toDF("media_id", "content"),
       "media_id", "content", idxDir, outDir, maxHamming = 3, checkpointDir = ckpt)
     try {
@@ -320,6 +327,7 @@ class StreamsSpec extends SparkSpec {
       mem.addData(delta2.map(payload): _*)
       q.processAllAvailable()
     } finally q.stop()
+    assert(cacheFootprint == cached, "the ingest must release every cache it created")
     val streamKept = spark.read.parquet(outDir).select("media_id")
       .as[Long].collect().sorted.toSeq
 
@@ -357,6 +365,7 @@ class StreamsSpec extends SparkSpec {
     // the persisted fingerprint index; 7 is novel
     val mem = MemoryStream[(Long, Array[Byte])]
     def payload(id: Long) = (id, GenMedia.audioDedupFixture(id))
+    val cached = cacheFootprint
     val q = Streams.incrementalAudioDedupIngest(mem.toDF().toDF("media_id", "content"),
       "media_id", "content", idxDir, outDir, checkpointDir = ckpt)
     try {
@@ -365,6 +374,7 @@ class StreamsSpec extends SparkSpec {
       mem.addData(Seq(250L, 7L).map(payload): _*)
       q.processAllAvailable()
     } finally q.stop()
+    assert(cacheFootprint == cached, "the ingest must release every cache it created")
     val kept = spark.read.parquet(outDir).select("media_id").as[Long].collect().sorted.toSeq
     assert(kept == Seq(0L, 1L, 2L, 3L, 4L, 7L), s"got $kept")
   }
@@ -407,6 +417,36 @@ class StreamsSpec extends SparkSpec {
     assert(spark.read.parquet(idxDir).select("id").distinct().count() == 5L)
   }
 
+  test("incrementalDedupIngest soak: no cache outlives its micro-batch") {
+    // the face's survivors and the dedup operator's token frames belong to
+    // one micro-batch: the cache footprint stays flat batch after batch
+    implicit val sqlCtx = spark.sqlContext
+    val dir = java.nio.file.Files.createTempDirectory("graft-ingest-soak")
+    def doc(i: Long) = s"soak document body number $i with plenty of distinct words $i"
+    val cached = cacheFootprint
+    val mem = MemoryStream[(Long, String)]
+    val q = Streams.incrementalDedupIngest(mem.toDF().toDF("doc_id", "text"),
+      "doc_id", "text", s"$dir/index", s"$dir/out", threshold = 0.7,
+      checkpointDir = s"$dir/ckpt")
+    try (0L until 12L).foreach { b =>
+      // two novel docs, and a copy of the previous batch's first doc (of
+      // doc 1, within the batch, for batch 0)
+      mem.addData((3 * b + 1, doc(3 * b + 1)), (3 * b + 2, doc(3 * b + 2)),
+        (3 * b + 3, doc(math.max(3 * b - 2, 1))))
+      q.processAllAvailable()
+      assert(cacheFootprint == cached, s"after batch $b")
+    } finally q.stop()
+    assert(cacheFootprint == cached, "after stop")
+    val kept = spark.read.parquet(s"$dir/out").select("doc_id").as[Long].collect().sorted.toSeq
+    assert(kept == (1L to 36L).filter(_ % 3 != 0), kept.toString)
+  }
+
+  test("cdcCurrent: a changes dir that cannot be listed fails instead of reading as empty") {
+    val snap = Seq((1L, "alice")).toDF("id", "name")
+    intercept[java.io.IOException](
+      Streams.cdcCurrent(snap, "nosuchfs:///x", Seq("id"), "seq", "op"))
+  }
+
   test("cdcIngest: streamed merge equals the batch merge; crashed-batch replay idempotent") {
     implicit val sqlCtx = spark.sqlContext
     val dir = java.nio.file.Files.createTempDirectory("graft-cdc-stream")
@@ -420,12 +460,14 @@ class StreamsSpec extends SparkSpec {
       .parquet(s"$dir/changes/batch=0")
 
     val mem = MemoryStream[(Long, String, Long, String)]
+    val cached = cacheFootprint
     val q = Streams.cdcIngest(mem.toDF().toDF("id", "name", "seq", "op"),
       Seq("id"), "seq", "op", s"$dir/changes", s"$dir/ckpt")
     try {
       mem.addData(d1: _*); q.processAllAvailable()
       mem.addData(d2: _*); q.processAllAvailable()
     } finally q.stop()
+    assert(cacheFootprint == cached, "the ingest must release every cache it created")
 
     val cur = Streams.cdcCurrent(snap, s"$dir/changes", Seq("id"), "seq", "op")
       .orderBy("id").collect().map(r => (r.getLong(0), r.getString(1)))
@@ -447,6 +489,7 @@ class StreamsSpec extends SparkSpec {
     def vec(i: Long): Array[Float] =
       Array.tabulate(16)(j => if (j == (i % 13).toInt) 1f else 0f)
     val mem = MemoryStream[(Long, Array[Float])]
+    val cached = cacheFootprint
     val q = Streams.incrementalEmbeddingDedupIngest(
       mem.toDF().toDF("id", "emb"), "id", "emb",
       s"$dir/index", s"$dir/out", threshold = 0.95, checkpointDir = s"$dir/ckpt")
@@ -459,6 +502,7 @@ class StreamsSpec extends SparkSpec {
       mem.addData((7L, vec(2)), (8L, vec(100)), (9L, vec(100)))
       q.processAllAvailable()
     } finally q.stop()
+    assert(cacheFootprint == cached, "the ingest must release every cache it created")
     val kept = spark.read.parquet(s"$dir/out").select("id")
       .as[Long].collect().sorted.toSeq
     assert(kept == Seq(1L, 2L, 3L, 4L, 5L, 8L), s"kept $kept")
@@ -477,6 +521,7 @@ class StreamsSpec extends SparkSpec {
       .toDF("uid", "ts", "cents")
     rows.filter(col("cents") % 2 === 0).write.parquet(s"$dir/src")
     val src = spark.readStream.schema(rows.schema).parquet(s"$dir/src")
+    val cached = cacheFootprint
     def run() = Streams.resampleIngest(src, "ts", Seq("uid"), 60 * MIN,
       "cents", s"$dir/aggs", checkpointDir = s"$dir/ckpt")
     val q = run(); try q.processAllAvailable() finally q.stop()
@@ -499,6 +544,7 @@ class StreamsSpec extends SparkSpec {
     assert(new java.io.File(s"$dir/aggs").list().count(_.startsWith("batch=")) === 2)
     // restart on the same checkpoint with no new data: totals unchanged
     val q3 = run(); try q3.processAllAvailable() finally q3.stop()
+    assert(cacheFootprint == cached, "the ingest must release every cache it created")
     assert(totals() === t1)
   }
 }
