@@ -1,6 +1,14 @@
 package graft.engine
 
+import com.univocity.parsers.csv.CsvParser
+import org.apache.hadoop.fs.{FileStatus, Path => HPath}
+import org.apache.hadoop.io.{LongWritable, Text}
+import org.apache.hadoop.io.compress.CompressionCodecFactory
+import org.apache.hadoop.mapred.{FileInputFormat, FileSplit, JobConf, TextInputFormat}
+import org.apache.hadoop.util.LineReader
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.csv.CSVOptions
+import org.apache.spark.sql.execution.datasources.csv.CSVUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import java.nio.file.{Files, Paths}
@@ -32,10 +40,14 @@ object Sources {
     val optional = Config.bool(cfg, "optional")
 
     val df = fileOpt match {
-      // glob patterns (crawl-scale WARC/parquet directories) defer the
-      // existence check to the reader — Spark resolves the match set
-      case Some(path) if Files.exists(path) || path.toString.exists("*?[".contains(_)) =>
-        readFile(spark, path.toString, cfg, columns, configDir)
+      // glob patterns (crawl-scale WARC/parquet directories) are expanded
+      // once, here; the readers get the matches
+      case Some(path) if Files.exists(path) || isGlob(path.toString) =>
+        val matches = globMatches(spark, path.toString)
+        if (matches.nonEmpty || !isGlob(path.toString))
+          readFile(spark, path.toString, matches, cfg, columns, configDir)
+        else if (optional) emptyFrame(spark, columns)
+        else throw new IllegalArgumentException(s"source `$name`: no file matches $path")
       case Some(path) if optional =>
         emptyFrame(spark, columns)
       case Some(path) =>
@@ -81,9 +93,10 @@ object Sources {
     spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
   }
 
-  /** Extension → reader (source.py:240-265 `_get_filetype`). */
-  def readFile(spark: SparkSession, path: String, cfg: Map[String, Any], columns: Seq[String],
-               configDir: java.nio.file.Path = Paths.get(".")): DataFrame = {
+  /** Extension → reader (source.py:240-265 `_get_filetype`). `matches` is
+    * `globMatches(path)`. */
+  def readFile(spark: SparkSession, path: String, matches: Seq[FileStatus], cfg: Map[String, Any],
+               columns: Seq[String], configDir: java.nio.file.Path = Paths.get(".")): DataFrame = {
     val ext = Config.str(cfg, "type").getOrElse {
       val lower = path.toLowerCase
       // the Common Crawl double extensions resolve to their real format
@@ -103,14 +116,17 @@ object Sources {
         base.substring(base.lastIndexOf('.') + 1)
       }
     }
+    // Spark's own file readers get a glob's matches: handed the pattern,
+    // Spark stats it as one path and logs a false "does not exist" trace
+    val paths = matches.map(_.getPath.toString)
     ext match {
-      case "csv" => readDelimited(spark, path, ",", cfg, columns)
-      case "tsv" => readDelimited(spark, path, "\t", cfg, columns)
-      case "txt" | "fwf" | "fixedwidth" => readFixedWidth(spark, path, cfg, configDir)
-      case "jsonl" | "ndjson" => spark.read.json(path)
+      case "csv" => readDelimited(spark, path, matches, ",", cfg, columns)
+      case "tsv" => readDelimited(spark, path, matches, "\t", cfg, columns)
+      case "txt" | "fwf" | "fixedwidth" => readFixedWidth(spark, path, matches, cfg, configDir)
+      case "jsonl" | "ndjson" => spark.read.json(paths: _*)
       case "json" => readJson(spark, path, cfg)
-      case "parquet" => spark.read.parquet(path)
-      case "orc" => spark.read.orc(path)
+      case "parquet" => spark.read.parquet(paths: _*)
+      case "orc" => spark.read.orc(paths: _*)
       case "xml" =>
         val rowTag = Config.str(cfg, "xpath").map(_.stripPrefix("//")).getOrElse("row")
         spark.read.format("xml").option("rowTag", rowTag).load(path)
@@ -180,27 +196,34 @@ object Sources {
     * forward-filled only under `fill_sparse_headers: true`, and data
     * starting after the largest listed row. `header_rows: 0` (engine
     * extension) reads headerless with `columns` as the schema names.
-    * `columns:` subset/rename happens post-read in `read`. */
-  private def readDelimited(spark: SparkSession, path: String, sep: String,
+    * `columns:` subset/rename happens post-read in `read`.
+    *
+    * The header is read on the driver from the first data file in sorted
+    * order (see `dataFiles`), so defining the frame runs no Spark job;
+    * every data file drops its own header rows. The scan gets the matches,
+    * not the pattern. */
+  private def readDelimited(spark: SparkSession, path: String, matches: Seq[FileStatus], sep: String,
                             cfg: Map[String, Any], columns: Seq[String]): DataFrame = {
     val encoding = Config.str(cfg, "encoding").getOrElse("UTF-8")
     val fillSparse = Config.bool(cfg, "fill_sparse_headers")
-    val base = spark.read
-      .option("sep", sep)
-      .option("encoding", encoding)
-      .option("nullValue", "\u0000") // sentinel: keep "" as "" (keep_default_na=False)
-      .option("emptyValue", "")
-      .option("escape", "\"") // RFC-4180 doubled-quote escaping (pandas default)
-      .option("inferSchema", false)
-
-    def headerLines(n: Int): List[String] =
-      scala.io.Source.fromFile(path, encoding).getLines().take(n).toList
+    val csvOptions = Map(
+      "sep" -> sep,
+      "encoding" -> encoding,
+      "nullValue" -> "\u0000", // sentinel: keep "" as "" (keep_default_na=False)
+      "emptyValue" -> "",
+      "escape" -> "\"", // RFC-4180 doubled-quote escaping (pandas default)
+      "inferSchema" -> "false")
+    val base = spark.read.options(csvOptions)
+    val paths = matches.map(_.getPath.toString)
+    def headerFile: HPath = dataFiles(spark, matches).nextOption()
+      .getOrElse(throw new IllegalArgumentException(s"no input file under $path"))
+    def headerLines(n: Int): List[String] = withLines(spark, headerFile, encoding)(_.take(n).map(_._1).toList)
     def splitLine(l: String): Seq[String] =
       l.split(java.util.regex.Pattern.quote(sep), -1).toSeq
-    /** Distributed body parse with known names, dropping the first `skip` lines. */
+    def schema(names: Seq[String]) = StructType(names.map(n => StructField(n, StringType)))
+    /** Distributed body parse with known names, dropping each file's first `skip` lines. */
     def body(names: Seq[String], skip: Int): DataFrame =
-      base.schema(StructType(names.map(n => StructField(n, StringType))))
-        .csv(linesAfter(spark, path, skip)).na.fill("")
+      base.schema(schema(names)).csv(linesAfter(spark, dataFiles(spark, matches).toSeq, skip)).na.fill("")
 
     cfg.getOrElse("header_rows", 1) match {
       case l: List[_] =>
@@ -212,15 +235,19 @@ object Sources {
       case v if v.toString == "0" =>
         if (columns.isEmpty)
           throw new IllegalArgumentException(s"headerless file $path requires `columns`")
-        base.option("header", false)
-          .schema(StructType(columns.map(n => StructField(n, StringType)))).csv(path)
+        base.option("header", false).schema(schema(columns)).csv(paths: _*)
           .na.fill("") // unquoted empty cells arrive as null; the all-string
         // model has no missing values (keep_default_na=False parity)
       case v if v.toString == "1" =>
-        val df = base.option("header", true).csv(path)
-        // all-string contract: header inference yields strings already
-        // (inferSchema=false), but normalize the schema explicitly
-        df.select(df.columns.map(c => col(c).cast(StringType).as(c)).toIndexedSeq: _*).na.fill("")
+        // the names Spark's header inference derives, without its job
+        val options = new CSVOptions(csvOptions + ("header" -> "true"), true, "UTC")
+        val names = withLines(spark, headerFile, encoding) { lines =>
+          CSVUtils.filterCommentAndEmpty(lines.map(_._1), options).nextOption()
+        }.fold(Array.empty[String]) { line =>
+          CSVUtils.makeSafeHeader(new CsvParser(options.asParserSettings).parseLine(line),
+            spark.conf.get("spark.sql.caseSensitive", "false").toBoolean, options)
+        }
+        base.option("header", true).schema(schema(names.toIndexedSeq)).csv(paths: _*).na.fill("")
       case v =>
         // header is the single row N; the rows before it are skipped junk
         val n = v.toString.toInt
@@ -229,18 +256,81 @@ object Sources {
     }
   }
 
-  /** The file's lines with the first `skip` physical lines dropped,
-    * order-safely. The previous `monotonically_increasing_id >= skip` idiom
-    * only drops the right lines while the head of the file lands in
-    * partition 0 — true under today's split packing but an implicit
-    * artifact of it. Hadoop generates a file's splits in byte-offset order
-    * and `zipWithIndex` assigns globally contiguous indices in partition
-    * order, so this holds no matter how many partitions the file splits
-    * into (SourcesSpec pins it with a forced multi-split read). */
-  private def linesAfter(spark: SparkSession, path: String, skip: Int): Dataset[String] = {
+  private def isGlob(path: String) = path.exists("*?[".contains(_))
+
+  /** A source path's matches in sorted order: a glob's matches, or the path
+    * itself when it exists (Hadoop `globStatus`). */
+  private[engine] def globMatches(spark: SparkSession, path: String): Seq[FileStatus] = {
+    val p = new HPath(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Option(fs.globStatus(p)).fold(Seq.empty[FileStatus])(_.toSeq).sortBy(_.getPath.toString)
+  }
+
+  /** The data files under a source's matches, in sorted order: a file match
+    * is itself, a directory is walked depth first (a partitioned
+    * destination keeps its files under `k=v/`), skipping at every level
+    * the names Spark's file index skips — `_` or `.` first (a `_` name
+    * holding `=` is a partition directory) or a `._COPYING_` suffix. */
+  private def dataFiles(spark: SparkSession, matches: Seq[FileStatus]): Iterator[HPath] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    def hidden(n: String) =
+      (n.startsWith("_") && !n.contains("=")) || n.startsWith(".") || n.endsWith("._COPYING_")
+    def walk(st: FileStatus): Iterator[HPath] =
+      if (!st.isDirectory) Iterator(st.getPath)
+      else st.getPath.getFileSystem(conf).listStatus(st.getPath)
+        .filterNot(f => hidden(f.getPath.getName)).sortBy(_.getPath.toString).iterator.flatMap(walk)
+    matches.iterator.flatMap(walk)
+  }
+
+  /** `f` over the lines of `file` as Hadoop's TextInputFormat reads them,
+    * each with the bytes it takes in the decompressed stream: decoded by the
+    * Hadoop codec for its suffix (.gz, or .zst through ZstdCodec), split by
+    * LineReader (\n, \r, \r\n), a leading UTF-8 BOM dropped from the text as
+    * LineRecordReader drops it, each line decoded with `encoding`. */
+  private def withLines[T](spark: SparkSession, file: HPath, encoding: String)
+                          (f: Iterator[(String, Int)] => T): T = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val raw = file.getFileSystem(conf).open(file)
+    val reader = new LineReader(Option(new CompressionCodecFactory(conf).getCodec(file))
+      .fold[java.io.InputStream](raw)(_.createInputStream(raw)))
+    try {
+      var first = true
+      f(Iterator.continually {
+        val t = new Text()
+        val consumed = reader.readLine(t)
+        if (consumed == 0) null
+        else {
+          val b = t.getBytes
+          val bom = first && t.getLength >= 3 && b(0) == 0xEF.toByte && b(1) == 0xBB.toByte && b(2) == 0xBF.toByte
+          first = false
+          val line = if (bom) new String(b, 3, t.getLength - 3, encoding) else new String(b, 0, t.getLength, encoding)
+          (line, consumed)
+        }
+      }.takeWhile(_ != null))
+    } finally reader.close()
+  }
+
+  /** The lines of `files` with each file's first `skip` physical lines
+    * dropped, as one Hadoop text scan split as `sc.textFile` splits. The
+    * driver reads each file's first `skip` lines to learn the byte offset
+    * its body starts at; a task keeps a line when its key (the line's
+    * offset in the decompressed stream) is at or past that offset. So the
+    * right lines go however a file splits, also when the skipped lines span
+    * a split boundary (SourcesSpec pins it with a forced multi-split read),
+    * and K files cost K small driver reads, not K scans. */
+  private def linesAfter(spark: SparkSession, files: Seq[HPath], skip: Int): Dataset[String] = {
     import spark.implicits._
-    spark.sparkContext.textFile(path).zipWithIndex()
-      .filter(_._2 >= skip).map(_._1).toDS()
+    val sc = spark.sparkContext
+    val bodyStart = files.map(f =>
+      f.toUri.getPath -> withLines(spark, f, "UTF-8")(_.take(skip).map(_._2.toLong).sum)).toMap
+    val job = new JobConf(sc.hadoopConfiguration)
+    FileInputFormat.setInputPaths(job, files: _*)
+    sc.hadoopRDD(job, classOf[TextInputFormat], classOf[LongWritable], classOf[Text], sc.defaultMinPartitions)
+      .asInstanceOf[org.apache.spark.rdd.HadoopRDD[LongWritable, Text]]
+      .mapPartitionsWithInputSplit { (split, lines) =>
+        val start = bodyStart(split.asInstanceOf[FileSplit].getPath.toUri.getPath)
+        lines.collect { case (offset, line) if offset.get >= start => line.toString }
+      }.toDS()
   }
 
   /** Multi-row headers flattened to `A__b` (source.py:346-401): upper rows
@@ -424,8 +514,8 @@ object Sources {
     * which of its columns hold name/start/end/width (start+end take
     * precedence over width, as in the reference). Implemented as substring
     * projections over spark.read.text — narrow and codegen'd. */
-  private def readFixedWidth(spark: SparkSession, path: String, cfg: Map[String, Any],
-                             configDir: java.nio.file.Path): DataFrame = {
+  private def readFixedWidth(spark: SparkSession, path: String, matches: Seq[FileStatus],
+                             cfg: Map[String, Any], configDir: java.nio.file.Path): DataFrame = {
     val (names: Seq[String], colspecs: Seq[(Int, Int)]) = Config.str(cfg, "colspec_file") match {
       case Some(cf) =>
         val cfPath = { val p0 = Paths.get(cf); if (p0.isAbsolute) p0 else configDir.resolve(cf) }
@@ -476,8 +566,8 @@ object Sources {
       throw new IllegalArgumentException(s"fixedwidth: ${names.size} names but ${colspecs.size} colspecs")
     val headerRows = Config.int(cfg, "header_rows").getOrElse(0)
     val text =
-      if (headerRows > 0) linesAfter(spark, path, headerRows).toDF("value")
-      else spark.read.text(path)
+      if (headerRows > 0) linesAfter(spark, dataFiles(spark, matches).toSeq, headerRows).toDF("value")
+      else spark.read.text(matches.map(_.getPath.toString): _*)
     text.select(names.zip(colspecs).map { case (n, (a, b)) =>
       trim(substring(col("value"), a + 1, b - a)).as(n)
     }.toIndexedSeq: _*)
@@ -504,7 +594,7 @@ object Sources {
       finally in.close()
     }
     val columns = Config.asList(cfg.getOrElse("columns", Nil)).map(_.toString)
-    readFile(spark, tmp.toString, cfg, columns)
+    readFile(spark, tmp.toString, globMatches(spark, tmp.toString), cfg, columns)
   }
 
   /** Minimal FTP RETR client — the reference's ftplib shape (source.py:
@@ -627,12 +717,10 @@ object Sources {
   private[engine] def binaryFilesSpread(spark: SparkSession, pathGlob: String)
       : org.apache.spark.rdd.RDD[(String, () => java.io.InputStream)] = {
     val sc = spark.sparkContext
-    val hp = new org.apache.hadoop.fs.Path(pathGlob)
-    val fs = hp.getFileSystem(sc.hadoopConfiguration)
-    val matched = Option(fs.globStatus(hp)).getOrElse(Array.empty)
-    val files = matched.flatMap { st =>
-      if (st.isDirectory) fs.listStatus(st.getPath).filter(_.isFile)
-      else Array(st)
+    val fs = new HPath(pathGlob).getFileSystem(sc.hadoopConfiguration)
+    val files = globMatches(spark, pathGlob).flatMap { st =>
+      if (st.isDirectory) fs.listStatus(st.getPath).filter(_.isFile).toSeq
+      else Seq(st)
     }.map(_.getPath.toString).sorted
     if (files.isEmpty)
       throw new IllegalArgumentException(s"no input files match $pathGlob")
