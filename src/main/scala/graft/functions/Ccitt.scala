@@ -132,12 +132,7 @@ object Ccitt {
       pos += 1
       v
     }
-    def peekBit(off: Int): Int = {
-      val p = pos + off
-      if (p >= nbits) -1 else (b(p >> 3) >> (7 - (p & 7))) & 1
-    }
     def align(): Unit = pos = (pos + 7) & ~7
-    def atEnd: Boolean = pos >= nbits
   }
 
   private final class Writer {

@@ -88,14 +88,6 @@ object Multimodal {
           lit(frameBytes)))).as(Seq("frame_no", "frame")))
   }
 
-  /** Size-aware repartitioning: binary payload rows are wide, so partition
-    * count follows total payload bytes, not row count. */
-  def repartitionByPayload(df: DataFrame, targetPartitionMb: Int = 128): DataFrame = {
-    val totalBytes = df.select(sum(length(col("content")))).head().getLong(0)
-    val parts = math.max(1, (totalBytes / (targetPartitionMb * 1024L * 1024L)).toInt)
-    df.repartition(parts)
-  }
-
   /** Exact payload dedup: hash-groupBy over the binary content — the same
     * shape as Dedup.exactGroups, md5 computed without materializing
     * payloads on the driver. */

@@ -41,8 +41,6 @@ object Vp8 {
     * index `yStride + 1`. */
   final case class Planes(w: Int, h: Int, yStride: Int, uvStride: Int,
                           y: Array[Byte], u: Array[Byte], v: Array[Byte]) {
-    def uvW: Int = (w + 1) >> 1
-    def uvH: Int = (h + 1) >> 1
     def yAt(x: Int, yy: Int): Int = y((1 + yy) * yStride + 1 + x) & 0xFF
     def uAt(x: Int, yy: Int): Int = u((1 + yy) * uvStride + 1 + x) & 0xFF
     def vAt(x: Int, yy: Int): Int = v((1 + yy) * uvStride + 1 + x) & 0xFF

@@ -1,18 +1,64 @@
 package graft.tools
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.ExplainMode
+
 /**
- * Plan audit: dump formatted physical plans for representative queries and
- * grep-check the properties that matter at scale — filter/projection
- * pushdown into the parquet scan, broadcast joins for dimension tables,
- * map-side partial aggregation, whole-stage codegen coverage.
- * Output: PLANS.md at the repo root.
+ * Plan audit, two modes over one formatted-explain helper:
+ *
+ *  - no arguments: dump formatted physical plans for representative queries
+ *    and grep-check the properties that matter at scale — filter/projection
+ *    pushdown into the parquet scan, broadcast joins for dimension tables,
+ *    map-side partial aggregation, whole-stage codegen coverage. Output:
+ *    PLANS.md at the repo root.
+ *  - `<tag> <suffix> <q...>`: write each named bench query's
+ *    `.explain("formatted")` to plans/<tag>/<q>_<suffix>.txt — the
+ *    optimization rounds' before/after plan-shape evidence. A
+ *    side-effecting gate (the streaming ones) gives the plan of the frame
+ *    it RETURNS; its per-batch profile comes from ProfileQuery instead.
+ *
+ * Both read the tables under `SPARK_GRAFT_SF_DIR` (default sf0.01).
+ *
+ *   sbt "runMain graft.tools.PlanAudit"
+ *   sbt "runMain graft.tools.PlanAudit r21 before q_pagerank q_hits"
  */
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val spark = graft.Session.build()
     spark.sparkContext.setLogLevel("ERROR")
+    graft.functions.Graph.quietCheckpointReleaseWarns()
+    // owns the binary parquet staged for the scan-shaped audits
+    val tmp = java.nio.file.Files.createTempDirectory("graft-audit")
+    try {
+      if (args.isEmpty) audit(spark, sfDir, tmp)
+      else dump(spark, sfDir, args(0), args(1), args.drop(2).toSeq)
+      spark.stop()
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(tmp.toFile)
+  }
 
+  private def explain(df: DataFrame): String =
+    df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+
+  /** Releases a query's operator persists before the next one plans. */
+  private def cleanup(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+  }
+
+  private def dump(spark: SparkSession, sfDir: String, tag: String, suffix: String,
+                   names: Seq[String]): Unit = {
+    val dir = java.nio.file.Paths.get(s"plans/$tag")
+    java.nio.file.Files.createDirectories(dir)
+    names.foreach { name =>
+      val txt = explain(graft.SparkEntry.queries(name)(spark, sfDir))
+      java.nio.file.Files.write(dir.resolve(s"${name}_$suffix.txt"), txt.getBytes("UTF-8"))
+      println(s"wrote plans/$tag/${name}_$suffix.txt (${txt.length} chars)")
+      cleanup(spark)
+    }
+  }
+
+  private def audit(spark: SparkSession, sfDir: String, tmp: java.nio.file.Path): Unit = {
     val interesting = Seq(
       "q_source_parquet" -> Seq("PushedFilters", "ReadSchema"),
       "q_join_merge_key" -> Seq("BroadcastHashJoin", "BroadcastExchange"),
@@ -69,14 +115,14 @@ object PlanAudit {
     lazy val binaryScanDir = {
       import spark.implicits._
       graft.expressions.GraftFunctions.register(spark)
-      val dir = java.nio.file.Files.createTempDirectory("graft-audit-bin").toString
-      val f = java.nio.file.Files.createTempFile("graft-audit", ".rtf")
+      val dir = tmp.resolve("bin").toString
+      val f = tmp.resolve("body.rtf")
       graft.engine.Rtf.write(f, Seq("audit body"))
       Seq((1L, java.nio.file.Files.readAllBytes(f))).toDF("id", "content")
         .write.mode("overwrite").parquet(dir)
       dir
     }
-    def audited(name: String): org.apache.spark.sql.DataFrame = name match {
+    def audited(name: String): DataFrame = name match {
       case "__doc_text_scan__" =>
         spark.read.parquet(binaryScanDir).selectExpr("id", "doc_text(content) AS text")
       case "__decode_text_scan__" =>
@@ -86,9 +132,8 @@ object PlanAudit {
     }
 
     interesting.foreach { case (name, checks) =>
-      val df = audited(name)
-      val plan = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+      val plan = explain(audited(name))
+      cleanup(spark)
       sb.append(s"## $name\n\n")
       checks.foreach { c =>
         val hit = plan.contains(c)
@@ -113,6 +158,5 @@ object PlanAudit {
     }
     java.nio.file.Files.writeString(path, sb.toString)
     println("wrote PLANS.md")
-    spark.stop()
   }
 }

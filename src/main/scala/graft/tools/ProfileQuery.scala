@@ -5,7 +5,7 @@ import scala.collection.mutable
 
 /**
  * Per-query profiling harness for the optimization rounds (guide §1:
- * measure first). Runs each named bench query once warm + once measured
+ * measure first). Runs each named bench query twice warm + once measured
  * under a SparkListener and prints where the wall time went: per-job
  * durations (with descriptions), per-stage durations / task counts /
  * shuffle bytes, and the driver-side "gap" time no job covers — the
@@ -82,10 +82,9 @@ object ProfileQuery {
     def noop(df: org.apache.spark.sql.DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
 
-    val warmRuns = sys.env.getOrElse("SPARK_GRAFT_PROFILE_WARM", "2").toInt
     args.foreach { name =>
       val fn = graft.SparkEntry.queries(name)
-      (1 to warmRuns).foreach { _ => noop(fn(spark, sfDir)); cleanup() } // JIT + codegen
+      (1 to 2).foreach { _ => noop(fn(spark, sfDir)); cleanup() } // JIT + codegen
       jobs.clear(); stageBuf.clear()
       record = true
       val t0 = System.nanoTime()

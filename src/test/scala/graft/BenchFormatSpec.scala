@@ -8,8 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * `[success] Total time…` epilogue (~74 chars) shares that window, so the
   * line alone gets ~1900 (round 11 budgeted 1990, emitted 1960, and the
   * head was clipped → parsed:null). Also pins that the best-ever file
-  * round-trips through its own parser and that token compression is
-  * lossless. */
+  * round-trips through its own parser. */
 class BenchFormatSpec extends AnyFunSuite {
 
   test("stdout budget leaves room for the sbt epilogue inside the 2000-char driver tail") {
@@ -20,40 +19,6 @@ class BenchFormatSpec extends AnyFunSuite {
   // realistic name lengths: the live suite averages 13 chars per query name
   private def syntheticMins(n: Int): Seq[(String, Double)] =
     (1 to n).map(i => f"q_synth_$i%03d" -> (0.05 + (i % 37) * 0.113))
-
-  /** Reconstruct full query names from any tier's line: parse qtok/qabbr/
-    * qprefix announcements and decode each key in the queries map. */
-  private def decodedNames(line: String): Set[String] = {
-    val qtok = """"qtok":"([^"]*)"""".r.findFirstMatchIn(line)
-      .map(_.group(1).split(",").toSeq)
-      .getOrElse(Nil)
-    // names announced as fast-dropped (values bounded by qmin_ds) count
-    // as present: the artifact stays name-complete
-    val qdrop = """"qdrop":"([^"]*)"""".r.findFirstMatchIn(line)
-      .map(_.group(1).split(",").toSeq.filter(_.nonEmpty))
-      .getOrElse(Nil)
-    // names-only tier: sorted tok-encoded names under prefix compression
-    val qpfx = """"qpfx":"([^"]*)"""".r.findFirstMatchIn(line)
-      .map(m => BenchFormat.prefixDecode(m.group(1)))
-      .getOrElse(Nil)
-    val qabbr = """"qabbr":\{([^}]*)\}""".r.findFirstMatchIn(line)
-      .map(m => """"([^"]+)":"([^"]+)"""".r.findAllMatchIn(m.group(1))
-        .map(x => x.group(1) -> x.group(2)).toMap)
-      .getOrElse(Map.empty[String, String])
-    val prefixed = line.contains("\"qprefix\":\"q_\"")
-    val qs = """"queries":\{([^}]*)\}""".r.findFirstMatchIn(line).map(_.group(1)).getOrElse("")
-    val mapKeys = """"([^"]+)":""".r.findAllMatchIn(qs).map(_.group(1)).toSeq
-    (mapKeys ++ qdrop ++ qpfx).flatMap { k0 =>
-      val k1 =
-        if (qtok.nonEmpty) BenchFormat.tokDecode(k0, qtok)
-        else if (k0.nonEmpty && k0.head.isUpper)
-          qabbr.get(k0.take(1)).map(_ + k0.drop(1)).getOrElse(k0)
-        else k0
-      // qprefix strips only names that HAD the prefix; a non-"q_" name
-      // (etl_render) rides unstripped, so both readings are candidates
-      if (prefixed) Seq("q_" + k1, k1) else Seq(k1)
-    }.toSet
-  }
 
   test("fmt strips trailing zeros but stays numeric JSON") {
     assert(BenchFormat.fmt(0.120, 3) == "0.12")
@@ -66,22 +31,21 @@ class BenchFormatSpec extends AnyFunSuite {
   test("stdout line fits the budget at 90 queries") {
     val line = BenchFormat.stdoutLine(
       total = 123.456, mins = syntheticMins(90),
-      spreadWarn = Seq("q_synthetic_name_001" -> 2.7),
-      contendedCount = 2, machineContended = false,
-      resultsFile = "/root/repo/BENCH_RESULTS.json",
-      reps = 3, cpus = "32", sfDir = "/root/testdata/sf0.1")
+      machineContended = false, sfDir = "sf0.1")
     assert(line.length <= BenchFormat.StdoutBudget, s"line was ${line.length} chars")
     assert(line.startsWith("""{"metric":"total","value":"""))
     assert(line.contains(""""queries":{"""))
+    // a suite this size fits whole: every name rides, stripped of "q_",
+    // with its decisecond value, and nothing is announced as omitted
+    val (entries, omitted, _) = valuesTier(line)
+    assert(entries == syntheticMins(90).map { case (k, v) => k.drop(2) -> math.round(v * 10) }.toMap)
+    assert(omitted == 0 && !line.contains("queries_omitted") && !line.contains("qomax_ds"))
   }
 
   test("stdout line survives a pathological 150-query suite") {
     val line = BenchFormat.stdoutLine(
       total = 999.9, mins = syntheticMins(150),
-      spreadWarn = syntheticMins(150).map { case (k, _) => k -> 81.0 },
-      contendedCount = 150, machineContended = true,
-      resultsFile = "/root/repo/BENCH_RESULTS.json",
-      reps = 3, cpus = "32", sfDir = "/root/testdata/sf0.1")
+      machineContended = true, sfDir = "sf0.1")
     assert(line.length <= BenchFormat.StdoutBudget, s"line was ${line.length} chars")
     assert(line.contains(""""machine_contended":true"""))
   }
@@ -99,22 +63,30 @@ class BenchFormatSpec extends AnyFunSuite {
     (entries, omitted, omax)
   }
 
+  /** The line's envelope keys (everything outside the queries map). */
+  private def envelopeKeys(line: String): Set[String] =
+    """"([a-z_]+)":""".r.findAllMatchIn(line.replaceFirst(""""queries":\{[^}]*\}""", ""))
+      .map(_.group(1)).toSet
+
+  /** Every key the line may carry: no encoding announcement other than the
+    * "q_" strip and the decisecond unit, so the keys stay plain. */
+  private val EnvelopeKeys = Set("metric", "value", "unit", "queries", "qprefix", "qunit",
+    "queries_omitted", "qomax_ds", "machine_contended", "failed", "sf")
+
   test("values-first tier: past the complete-map limit, plain names + ds values for the slowest") {
     // 135 × 16-char names at realistic mixed timings: past what the
-    // complete plain tiers fit under the 1900 budget. The r21 PERF lesson:
+    // complete map fits under the 1900 budget. The r21 PERF lesson:
     // the driver never decoded the token/prefix compressed tiers, so a
     // name-complete valueless line gave it NOTHING — values with PLAIN
     // keys must win, omission announced and bounded.
     val mid = (1 to 135).map(i => f"q_operator_n_$i%03d" -> (0.05 + (i % 37) * 0.113))
     val line = BenchFormat.stdoutLine(
-      total = 12.0, mins = mid, spreadWarn = Nil,
-      contendedCount = 0, machineContended = false,
-      resultsFile = "/root/repo/BENCH_RESULTS.json",
-      reps = 3, cpus = "32", sfDir = "/root/testdata/sf0.1")
+      total = 12.0, mins = mid,
+      machineContended = false, sfDir = "sf0.1")
     assert(line.length <= BenchFormat.StdoutBudget, s"line was ${line.length} chars")
     assert(line.contains("\"qunit\":\"ds\"") && line.contains("\"qprefix\":\"q_\""))
-    assert(!line.contains("\"qtok\":") && !line.contains("\"qabbr\":"),
-      s"values-first tier must not token-encode keys: ${line.take(200)}")
+    assert(envelopeKeys(line).subsetOf(EnvelopeKeys),
+      s"values-first tier must not encode keys: ${line.take(200)}")
     val (entries, omitted, omax) = valuesTier(line)
     assert(entries.nonEmpty && entries.size + omitted == 135)
     // kept = the slowest; every kept value bounds every omitted one
@@ -130,10 +102,8 @@ class BenchFormatSpec extends AnyFunSuite {
       name -> (if (i % 3 == 0) 0.5 + (i % 20) * 0.3 else 0.08)
     }
     val line = BenchFormat.stdoutLine(
-      total = 200.0, mins = mixed, spreadWarn = Nil,
-      contendedCount = 0, machineContended = false,
-      resultsFile = "/root/repo/BENCH_RESULTS.json",
-      reps = 3, cpus = "32", sfDir = "/root/testdata/sf0.1")
+      total = 200.0, mins = mixed,
+      machineContended = false, sfDir = "sf0.1")
     assert(line.length <= BenchFormat.StdoutBudget, s"line was ${line.length} chars")
     val (entries, omitted, omax) = valuesTier(line)
     assert(entries.size + omitted == 150)
@@ -155,10 +125,8 @@ class BenchFormatSpec extends AnyFunSuite {
       f"q_${noise}_$i%03d" -> (if (i % 50 == 0) 45.0 else 2.0)
     }
     val line = BenchFormat.stdoutLine(
-      total = 450.0, mins = huge, spreadWarn = Nil,
-      contendedCount = 0, machineContended = false,
-      resultsFile = "/root/repo/BENCH_RESULTS.json",
-      reps = 3, cpus = "32", sfDir = "/root/testdata/sf0.1")
+      total = 450.0, mins = huge,
+      machineContended = false, sfDir = "sf0.1")
     assert(line.length <= BenchFormat.StdoutBudget, s"line was ${line.length} chars")
     assert(line.contains(""""queries_omitted":"""))
     assert(line.startsWith("{") && line.endsWith("}"))
@@ -173,50 +141,6 @@ class BenchFormatSpec extends AnyFunSuite {
     }
   }
 
-  test("tokenAbbreviations: lossless round-trip, codes are uppercase, deterministic") {
-    val names = Seq("source_csv", "source_tsv", "dedup_exact", "dedup_near_lsh",
-      "image_phash_dedup", "image_meta", "audio_fingerprint", "group_by_rank",
-      "filter_rows", "filter_rows_str", "rename_columns", "drop_columns")
-    val toks = BenchFormat.tokenAbbreviations(names)
-    assert(toks == BenchFormat.tokenAbbreviations(names)) // deterministic
-    assert(toks.nonEmpty && toks.size <= 26)
-    names.foreach { n =>
-      val enc = BenchFormat.tokEncode(n, toks)
-      assert(BenchFormat.tokDecode(enc, toks) == n, s"round-trip failed for $n via $enc")
-      assert(enc.length <= n.length)
-    }
-    // encoded names stay unique (decode inverts encode, so they must)
-    assert(names.map(BenchFormat.tokEncode(_, toks)).distinct.size == names.size)
-  }
-
-  test("prefixEncode/Decode round-trips sorted name lists exactly") {
-    val names = ("etl_render" +: SparkEntry.queries.keys.toSeq).map(n =>
-      if (n.startsWith("q_")) n.drop(2) else n)
-    val toks = BenchFormat.tokenAbbreviations(names)
-    val enc = names.map(BenchFormat.tokEncode(_, toks)).sorted
-    assert(BenchFormat.prefixDecode(BenchFormat.prefixEncode(enc)) == enc)
-    assert(BenchFormat.prefixDecode(BenchFormat.prefixEncode(Seq("a"))) == Seq("a"))
-    assert(BenchFormat.prefixDecode("") == Nil)
-    // prefixes beyond the 35-char cap still round-trip
-    val long = Seq("x" * 60 + "a", "x" * 60 + "b").sorted
-    assert(BenchFormat.prefixDecode(BenchFormat.prefixEncode(long)) == long)
-  }
-
-  test("prefixDecode handles the pre-round-19 comma/base-36 legacy layout") {
-    // entries comma-separated; each later entry opens with one base-36
-    // char = shared-prefix length — qpfx lines from r18-and-earlier
-    // artifacts must decode, not come back as one bogus name
-    assert(BenchFormat.prefixDecode("q_agg,5_sum,2join") ==
-      Seq("q_agg", "q_agg_sum", "q_join"))
-    // prefix counts past 9 use letters ('f' = 15)
-    assert(BenchFormat.prefixDecode("q_dedup_minhash,f_lsh") ==
-      Seq("q_dedup_minhash", "q_dedup_minhash_lsh"))
-    // a malformed legacy entry raises instead of silently misdecoding
-    intercept[IllegalArgumentException] {
-      BenchFormat.prefixDecode("q_agg,,x")
-    }
-  }
-
   test("current SparkEntry suite ships a NON-EMPTY plain-keyed values map (the r21 PERF fix)") {
     // realistic decisecond spread (r11 data shape: mostly 1-13 ds). At the
     // REAL suite size the r21 line degraded to names-only `"queries":{}`
@@ -227,10 +151,8 @@ class BenchFormatSpec extends AnyFunSuite {
     val names = "etl_render" +: SparkEntry.queries.keys.toSeq.sorted
     val mins = names.zipWithIndex.map { case (n, i) => n -> (0.1 + (i % 13) * 0.1) }
     val line = BenchFormat.stdoutLine(
-      total = 45.0, mins = mins, spreadWarn = Nil,
-      contendedCount = 0, machineContended = false,
-      resultsFile = "/root/repo/BENCH_RESULTS.json",
-      reps = 3, cpus = "32", sfDir = "/root/testdata/sf0.1")
+      total = 45.0, mins = mins,
+      machineContended = false, sfDir = "sf0.1")
     assert(line.length <= BenchFormat.StdoutBudget,
       s"line was ${line.length} chars for ${names.size} queries")
     val (entries, omitted, omax) = valuesTier(line)
@@ -238,38 +160,12 @@ class BenchFormatSpec extends AnyFunSuite {
       s"the driver must see a usable per-query map; got ${entries.size} entries")
     assert(entries.size + omitted == names.size)
     assert(entries.values.forall(_ >= omax))
-    assert(!line.contains("\"qtok\":") && !line.contains("\"qpfx\":"),
+    assert(envelopeKeys(line).subsetOf(EnvelopeKeys),
       "keys must be plain (qprefix-stripped only) — the driver decodes nothing else")
     // every kept key is a real query name, stripped of at most "q_"
     val nameSet = names.toSet
     entries.keys.foreach(k =>
       assert(nameSet.contains("q_" + k) || nameSet.contains(k), s"bogus key $k"))
-  }
-
-  test("familyAbbreviations: deterministic codes, reverse map round-trips every name") {
-    val names = Seq("source_csv", "source_tsv", "source_xml", "dedup_exact",
-      "dedup_near", "dedup_url", "data_x", "solo_one", "ann_a")
-    val abbr = BenchFormat.familyAbbreviations(names)
-    assert(abbr == BenchFormat.familyAbbreviations(names)) // deterministic
-    val m = abbr.toMap
-    assert(m.contains("source_") && m.contains("dedup_"))
-    assert(!m.values.toSeq.groupBy(identity).values.exists(_.size > 1), "codes unique")
-    assert(!m.contains("solo_")) // single member: announcement outweighs savings
-    assert(!m.contains("ann_")) // ditto — net-savings rule, not a length rule
-    // codes are single uppercase letters, clash-walked deterministically
-    val codes = m.values.toSet
-    assert(codes.forall(c => c.length == 1 && c.head.isUpper))
-    assert(codes.size == m.size)
-    // applying then reversing the most-specific family restores the name
-    names.foreach { n =>
-      val enc = abbr.collectFirst {
-        case (fam, code) if n.startsWith(fam) => (fam, code + n.drop(fam.length))
-      }
-      enc.foreach { case (fam, e) =>
-        val code = m(fam)
-        assert(e.startsWith(code) && fam + e.drop(code.length) == n)
-      }
-    }
   }
 
   test("fastSuspect: anomalous too-fast min is suspect until reproduced") {
@@ -323,16 +219,13 @@ class BenchFormatSpec extends AnyFunSuite {
 
   test("stdout line carries failed count when nonzero, in full and minimal tiers") {
     val base = (n: Int) => BenchFormat.stdoutLine(
-      total = 10.0, mins = syntheticMins(n), spreadWarn = Nil,
-      contendedCount = 0, machineContended = false,
-      resultsFile = "/root/repo/BENCH_RESULTS.json",
-      reps = 3, cpus = "32", sfDir = "/root/testdata/sf0.1", failedCount = 2)
+      total = 10.0, mins = syntheticMins(n),
+      machineContended = false, sfDir = "sf0.1", failedCount = 2)
     assert(base(90).contains(""","failed":2"""))
-    assert(base(150).contains(""","failed":2""")) // minimal-envelope tier
+    assert(base(150).contains(""","failed":2""")) // with queries omitted
     val clean = BenchFormat.stdoutLine(
-      total = 10.0, mins = syntheticMins(10), spreadWarn = Nil,
-      contendedCount = 0, machineContended = false,
-      resultsFile = "x.json", reps = 3, cpus = "32", sfDir = "sf0.1")
+      total = 10.0, mins = syntheticMins(10),
+      machineContended = false, sfDir = "sf0.1")
     assert(!clean.contains("failed"))
   }
 

@@ -18,6 +18,22 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     (cm.getClass.getMethod("numCachedEntries").invoke(cm).asInstanceOf[Int],
       spark.sparkContext.getPersistentRDDs.size)
   }
+
+  /** id -> "name, creation site, storage level" of every persistent RDD. */
+  def persistentRdds: Map[Int, String] =
+    spark.sparkContext.getPersistentRDDs.map { case (id, rdd) =>
+      // getCreationSite is private[spark] to scalac but public in the bytecode
+      val site = classOf[org.apache.spark.rdd.RDD[_]].getMethod("getCreationSite").invoke(rdd)
+      id -> s"name=${rdd.name} site=$site level=${rdd.getStorageLevel.description}"
+    }.toMap
+
+  /** One line per persistent RDD that appeared (+) or went away (-) since
+    * `before` was taken — what a footprint assertion names when it fails. */
+  def rddChanges(before: Map[Int, String]): String = {
+    val now = persistentRdds
+    ((now.keySet -- before.keySet).toSeq.sorted.map(id => s"\n  + rdd $id ${now(id)}") ++
+      (before.keySet -- now.keySet).toSeq.sorted.map(id => s"\n  - rdd $id ${before(id)}")).mkString
+  }
 }
 
 object SparkSpec {

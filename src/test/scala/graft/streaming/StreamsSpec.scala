@@ -428,15 +428,17 @@ class StreamsSpec extends SparkSpec {
     val q = Streams.incrementalDedupIngest(mem.toDF().toDF("doc_id", "text"),
       "doc_id", "text", s"$dir/index", s"$dir/out", threshold = 0.7,
       checkpointDir = s"$dir/ckpt")
+    val rddsAtStart = persistentRdds
     try (0L until 12L).foreach { b =>
+      val rddsBefore = persistentRdds
       // two novel docs, and a copy of the previous batch's first doc (of
       // doc 1, within the batch, for batch 0)
       mem.addData((3 * b + 1, doc(3 * b + 1)), (3 * b + 2, doc(3 * b + 2)),
         (3 * b + 3, doc(math.max(3 * b - 2, 1))))
       q.processAllAvailable()
-      assert(cacheFootprint == cached, s"after batch $b")
+      assert(cacheFootprint == cached, s"after batch $b${rddChanges(rddsBefore)}")
     } finally q.stop()
-    assert(cacheFootprint == cached, "after stop")
+    assert(cacheFootprint == cached, s"after stop${rddChanges(rddsAtStart)}")
     val kept = spark.read.parquet(s"$dir/out").select("doc_id").as[Long].collect().sorted.toSeq
     assert(kept == (1L to 36L).filter(_ % 3 != 0), kept.toString)
   }
