@@ -1,9 +1,19 @@
 package graft.functions
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import java.io.{DataInputStream, DataOutputStream, InputStream, OutputStream}
+import java.nio.ByteBuffer
+
+import scala.collection.mutable
+import scala.reflect.ClassTag
+
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.{RDD, ShuffledRDD}
+import org.apache.spark.serializer.{DeserializationStream, SerializationStream, Serializer,
+  SerializerInstance}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 
 /**
  * Link-graph analytics for crawl curation — the rank signal web-corpus
@@ -17,54 +27,151 @@ import org.apache.spark.sql.types.LongType
  * layers) reproduces it EXACTLY. Floating-point PageRank cannot make that
  * promise (per-vertex sums would depend on aggregation order).
  *
- * Scale shape: each iteration is one equi-join (ranks x edges on src) and
- * one groupBy(dst) sum — both shuffle on the same key, with map-side
- * partial aggregation; iteration count is a fixed small constant, so the
- * whole computation is `iters` shuffles over the edge list, never a
- * driver-side loop over rows. Dangling mass (nodes without outlinks) is
- * DROPPED by default, the common crawl-weighting simplification — ranks
- * then bound relative link authority rather than a strict probability;
- * `dangling = "redistribute"` restores canonical-parity conservation
- * (each iteration spreads the dangling mass uniformly, damped, keeping
- * integer exactness at the cost of one scalar aggregate per iteration).
+ * Shape: the edge frame is cast and filtered once through the DataFrame
+ * API; everything after runs over pair RDDs, so no iteration is analysed,
+ * optimized or code-generated by Catalyst. The distinct edges are grouped
+ * once into an adjacency — every node with its distinct out-neighbours
+ * (and, for HITS, in-neighbours) — hash-partitioned by node id on
+ * `spark.sql.shuffle.partitions` and persisted. Score vectors live on the
+ * same partitioner, so joining a score onto its node is narrow (a
+ * per-partition hash lookup) and each iteration is ONE shuffle: a
+ * map-side-combined sum of the contributions to their target. Every
+ * shuffle carries Long keys and Long values, written as eight raw bytes
+ * each (`LongSerializer`). The iterations chain as shuffle
+ * stages of whichever job next needs a result, exactly as GraphX chains
+ * co-partitioned vertex and edge RDDs (Gonzalez et al., OSDI 2014).
  *
- * r21 shuffle audit (optimization guide §2.4 — remove exchanges outright):
- *  - the node set derives from ONE exploded pass over the cached edge
- *    list (the former union-of-two-selects materialized both branches in
- *    one stage, before the edge cache existed, scanning the source twice);
- *  - out-degree is fused onto the edge list with a window over src — one
- *    exchange — instead of groupBy(src) + self-join (two exchanges plus a
- *    join), and it leaves the cached edge list hash-partitioned by src,
- *    exactly the clustering the per-iteration rank join needs;
- *  - the iteration loops persist() superseded frames instead of
- *    localCheckpoint()ing them: a persist is materialized BY the scalar
- *    action that follows (no extra job per iteration) and keeps the
- *    logical output partitioning visible to the planner (a checkpointed
- *    RDD scans as UnknownPartitioning, forcing the next iteration to
- *    re-exchange both join sides). Cached parents short-circuit stage
- *    submission, so per-iteration stage growth stays linear — the same
- *    property the old per-iteration checkpoint bought, without its job.
+ * Jobs per call: pageRank with dangling mass DROPPED (the default, the
+ * common crawl-weighting simplification — ranks then bound relative link
+ * authority rather than a strict probability) runs two, whatever the
+ * iteration count — the node count, and one materializing job for the
+ * output. `dangling = "redistribute"` restores canonical-parity
+ * conservation (each iteration spreads the dangling mass uniformly,
+ * damped) at one scalar job per iteration after the first (the first
+ * round's dangling mass is the uniform rank times the dangling-node count
+ * the node-count job returns). HITS runs the node count, one L1-total job
+ * per half-step, and the output job: `2 * iters + 2`.
+ *
+ * The output is a localCheckpoint: its blocks are reclaimed by the
+ * ContextCleaner when the frame is garbage-collected. The adjacency and
+ * the per-iteration score caches are released before the call returns.
  */
 object Graph {
   /** Total fixed-point mass (micro-rank units). rank*damping products stay
     * under 2^63: 10^12 * 10^6 = 10^18. */
   val Mass: Long = 1000000000000L
 
-  /** Optional plan evidence hook for the optimization rounds: when
-    * SPARK_GRAFT_PLAN_DIR is set, write the INTERNAL pre-checkpoint plan
-    * (the public frame is a localCheckpoint scan, which explains to a bare
-    * ExistingRDD). No behavior change when unset. */
-  private def dumpPlan(df: DataFrame, name: String): Unit =
-    sys.env.get("SPARK_GRAFT_PLAN_DIR").foreach { dir =>
-      try {
-        val p = java.nio.file.Paths.get(dir)
-        java.nio.file.Files.createDirectories(p)
-        java.nio.file.Files.write(p.resolve(s"$name.txt"),
-          df.queryExecution.explainString(
-            org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-            .getBytes("UTF-8"))
-      } catch { case _: Exception => () }
+  /** One node of the edge list with its distinct out-neighbours and, when
+    * the adjacency was built with them, its distinct in-neighbours (empty
+    * otherwise). Sorted ascending, so a rebuild lists them identically. */
+  private final case class Node(id: Long, out: Array[Long], in: Array[Long])
+
+  /** The persisted node set of an edge frame: `nodes` is hash-partitioned
+    * by id on `part`; `n` counts the nodes, `sinks` those without
+    * outlinks; `nodeNullable` says whether a cast endpoint column is
+    * nullable, which the output's node column keeps. */
+  private final class Adjacency(val nodes: RDD[Node], val part: HashPartitioner,
+                                val n: Long, val sinks: Long, val nodeNullable: Boolean)
+
+  /** Shuffle serializer for the loops' (Long, Long) pairs: every key and
+    * value is eight raw bytes. Spark would pick Kryo for primitive pairs,
+    * but a cold process pays 0.2-0.4 s of class loading and registration
+    * for its first Kryo instance, on the critical path of a small graph. */
+  private object LongSerializer extends Serializer with Serializable {
+    override def newInstance(): SerializerInstance = new SerializerInstance {
+      private def streamOnly = throw new UnsupportedOperationException("stream-only serializer")
+      override def serialize[T: ClassTag](t: T): ByteBuffer = streamOnly
+      override def deserialize[T: ClassTag](bytes: ByteBuffer): T = streamOnly
+      override def deserialize[T: ClassTag](bytes: ByteBuffer, loader: ClassLoader): T = streamOnly
+      override def serializeStream(s: OutputStream): SerializationStream = new SerializationStream {
+        private val out = new DataOutputStream(s)
+        override def writeObject[T: ClassTag](t: T): SerializationStream = {
+          out.writeLong(t.asInstanceOf[Long]); this
+        }
+        override def flush(): Unit = out.flush()
+        override def close(): Unit = out.close()
+      }
+      // readLong's EOFException at the end of a stream is the end-of-records
+      // signal Spark's key/value iterator expects
+      override def deserializeStream(s: InputStream): DeserializationStream = new DeserializationStream {
+        private val in = new DataInputStream(s)
+        override def readObject[T: ClassTag](): T = in.readLong().asInstanceOf[T]
+        override def close(): Unit = in.close()
+      }
     }
+  }
+
+  /** `pairs` moved to `part` by key, unchanged. */
+  private def partitioned(pairs: RDD[(Long, Long)], part: HashPartitioner): RDD[(Long, Long)] =
+    new ShuffledRDD[Long, Long, Long](pairs, part).setSerializer(LongSerializer)
+
+  /** The values of `pairs` summed per key on `part`, combined map-side. */
+  private def summed(pairs: RDD[(Long, Long)], part: HashPartitioner): RDD[(Long, Long)] =
+    pairs.combineByKeyWithClassTag[Long]((v: Long) => v, _ + _, _ + _, part,
+      mapSideCombine = true, LongSerializer)
+
+  private def sortedDistinct(b: mutable.ArrayBuilder.ofLong): Array[Long] = {
+    val a = b.result()
+    java.util.Arrays.sort(a)
+    var k = 0
+    var i = 0
+    while (i < a.length) {
+      if (i == 0 || a(i) != a(i - 1)) { a(k) = a(i); k += 1 }
+      i += 1
+    }
+    if (k == a.length) a else java.util.Arrays.copyOf(a, k)
+  }
+
+  private def grouped(pairs: Iterator[(Long, Long)]): mutable.LongMap[Array[Long]] = {
+    val b = mutable.LongMap.empty[mutable.ArrayBuilder.ofLong]
+    pairs.foreach { case (k, v) => b.getOrElseUpdate(k, new mutable.ArrayBuilder.ofLong) += v }
+    b.mapValuesNow(sortedDistinct)
+  }
+
+  /** Casts and filters the edge frame once, then builds, persists and
+    * counts its adjacency (ONE job). Null endpoints drop the edge;
+    * duplicate edges count once. */
+  private def adjacency(edges: DataFrame, srcCol: String, dstCol: String,
+                        withIn: Boolean): Adjacency = {
+    val e = edges
+      .select(col(srcCol).cast(LongType).as("src"), col(dstCol).cast(LongType).as("dst"))
+      .filter(col("src").isNotNull && col("dst").isNotNull)
+    val part = new HashPartitioner(edges.sparkSession.sessionState.conf.numShufflePartitions)
+    // src -> distinct dsts; one shuffle of the raw (src, dst) pairs
+    val out = partitioned(e.queryExecution.toRdd.map(r => (r.getLong(0), r.getLong(1))), part)
+      .mapPartitions(ps => grouped(ps).iterator, preservesPartitioning = true)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    // the distinct edges again, keyed by dst on the same partitioner: the
+    // dst-only nodes, and HITS's in-neighbours
+    val byDst = partitioned(out.flatMap { case (s, ds) => ds.iterator.map(d => (d, s)) }, part)
+    val nodes = out.zipPartitions(byDst, preservesPartitioning = true) { (outs, ins) =>
+      val in = grouped(ins)
+      val none = Array.emptyLongArray
+      val withOut = outs.map { case (id, ds) =>
+        Node(id, ds, if (withIn) in.getOrElse(id, none) else none)
+      }.toArray
+      val seen = mutable.LongMap.from(withOut.iterator.map(v => v.id -> ()))
+      withOut.iterator ++ in.iterator.collect {
+        case (id, ss) if !seen.contains(id) => Node(id, none, if (withIn) ss else none)
+      }
+    }.persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      val (n, sinks) = nodes.aggregate((0L, 0L))(
+        (c, v) => (c._1 + 1, c._2 + (if (v.out.isEmpty) 1 else 0)),
+        (a, b) => (a._1 + b._1, a._2 + b._2))
+      new Adjacency(nodes, part, n, sinks, e.schema.fields.exists(_.nullable))
+    } catch {
+      case t: Throwable => nodes.unpersist(blocking = false); throw t
+    } finally out.unpersist(blocking = false)
+  }
+
+  /** Materializes `rows` as a localCheckpointed frame (ONE job). */
+  private def output(edges: DataFrame, g: Adjacency, rows: RDD[Row],
+                     scoreCols: String*): DataFrame =
+    edges.sparkSession.createDataFrame(rows, StructType(
+      StructField("node", LongType, g.nodeNullable) +:
+        scoreCols.map(StructField(_, LongType, nullable = false))))
+      .localCheckpoint(true)
 
   /** PageRank over an edge frame. Returns (node, rank) with ranks in
     * micro-units of [[Mass]]. `dampingPpm` = damping factor in parts per
@@ -79,94 +186,52 @@ object Graph {
       s"pagerank: damping_ppm must be in [0,1e6], got $dampingPpm")
     require(dangling == "drop" || dangling == "redistribute",
       s"pagerank: dangling must be drop|redistribute, got $dangling")
-    // ONE cached edge frame for the whole pass (r21 profile: the former
-    // separate `e` cache existed only to derive this frame and the node
-    // set, yet cost its own full columnar cache build+write per run —
-    // every consumer reads e2 equally well). out-degree is fused on with
-    // ONE window exchange (the degree never changes across iterations);
-    // groupBy+join spent two exchanges and a join on the same thing, and
-    // the window leaves the frame hash-partitioned by src, the exact
-    // clustering the per-iteration rank join keys on.
-    val e2 = edges
-      .select(col(srcCol).cast(LongType).as("src"), col(dstCol).cast(LongType).as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-      .distinct()
-      .withColumn("out_deg", count(lit(1)).over(Window.partitionBy("src")))
-      .persist()
-    // ONE exploded pass over the cached edge list — the former
-    // union-of-two-selects materialized both branches inside a single
-    // stage, BEFORE the edge cache existed, so the source was scanned twice
-    val nodes = e2.select(explode(array(col("src"), col("dst"))).as("node"))
-      .distinct().persist()
+    val g = adjacency(edges, srcCol, dstCol, withIn = false)
+    val redistribute = dangling == "redistribute"
+    // a redistribute round's ranks are read twice — by its dangling-mass
+    // job and by the next round's contributions — so they are cached, and
+    // released once the round after them has materialized
+    var live: List[RDD[_]] = Nil
     try {
-      val n = nodes.count() // one pass; materializes e2's cache en route
+      val n = g.n
       require(n > 0, "pagerank: edge frame has no valid edges")
       val base = (Mass * (1000000L - dampingPpm) / 1000000L) / n
-      // dangling-mass redistribution needs the node set WITHOUT outlinks;
-      // its per-iteration scalar sum forces a materialization, so the loop
-      // persists each round's ranks (the scalar action materializes the
-      // cache; no separate checkpoint job) — the drop default stays a
-      // single lazy chain with zero mid-loop actions
-      val redistribute = dangling == "redistribute"
-      val danglingNodes =
-        if (redistribute)
-          nodes.join(e2.select(col("src").as("node")).distinct(), Seq("node"), "left_anti")
-            .persist()
-        else null
-      var ranks = nodes.withColumn("rank", lit(Mass / n))
-      // persisted per-iteration frames, released once superseded: ranks_k
-      // is consumed by ranks_{k+1}'s materialization, so after iteration
-      // k+1's scalar action lands, ranks_k's cache can go. An over-eager
-      // release would cost a recompute (cache miss), never correctness —
-      // unlike the old localCheckpoint whose blocks were unrecoverable.
-      var livePersists: List[DataFrame] = Nil
+      val part = g.part
+      var ranks: RDD[(Node, Long)] = g.nodes.map(v => (v, Mass / n))
+      var danglingMass = if (redistribute) Mass / n * g.sinks else 0L
       var it = 0
       while (it < iters) {
-        if (redistribute) {
-          ranks = ranks.persist()
-          livePersists = livePersists :+ ranks
-        }
         // contribution of u to each neighbor: rank_u * d DIV (1e6 * deg_u)
-        // — integral DIV, NOT `/`: Spark's `/` on longs is double
-        // division, and rank*d reaches 10^18 > 2^53 where doubles drop
-        // low bits (the oracle's integer `//` would then disagree)
-        val contribs = ranks
-          .join(e2, ranks("node") === e2("src"))
-          .select(col("dst").as("node"),
-            expr(s"rank * ${dampingPpm}L div (1000000L * out_deg)").as("contrib"))
-          .groupBy("node").agg(sum("contrib").as("in_mass"))
-        // uniform damped share of this round's dangling mass: floor twice,
-        // matching the oracle's `(dm * d // 1e6) // n` (floor composition
-        // over positive ints equals the single division)
-        val dShare =
-          if (!redistribute) 0L
+        val inMass = summed(ranks.flatMap { case (v, r) =>
+          if (v.out.isEmpty) Iterator.empty
           else {
-            val dm = ranks.join(danglingNodes, Seq("node"), "left_semi")
-              .agg(coalesce(sum("rank"), lit(0L))).head().getLong(0)
-            // this action materialized ranks_k; ranks_{k-1} is superseded
-            if (livePersists.size > 1) {
-              livePersists.head.unpersist(blocking = false)
-              livePersists = livePersists.tail
-            }
-            dm * dampingPpm / 1000000L / n
+            val c = r * dampingPpm / (1000000L * v.out.length)
+            v.out.iterator.map(d => (d, c))
           }
-        ranks = nodes
-          .join(contribs, Seq("node"), "left")
-          .select(col("node"),
-            (lit(base + dShare) + coalesce(col("in_mass"), lit(0L))).as("rank"))
+        }, part)
+        // uniform damped share of this round's dangling mass: floor twice,
+        // matching the oracle's `(dm * d // 1e6) // n`
+        val share = base + danglingMass * dampingPpm / 1000000L / n
+        // narrow left join onto the nodes: inMass is co-partitioned by id
+        ranks = g.nodes.zipPartitions(inMass) { (vs, ms) =>
+          val m = mutable.LongMap.from(ms)
+          vs.map(v => (v, share + m.getOrElse(v.id, 0L)))
+        }
         it += 1
+        if (redistribute && it < iters) {
+          ranks = ranks.persist(StorageLevel.MEMORY_AND_DISK)
+          danglingMass = ranks.map { case (v, r) => if (v.out.isEmpty) r else 0L }
+            .fold(0L)(_ + _)
+          // this job materialized ranks_it; ranks_{it-1} is superseded
+          live.foreach(_.unpersist(blocking = false))
+          live = List(ranks)
+        }
       }
-      if (danglingNodes != null) danglingNodes.unpersist()
-      dumpPlan(ranks, s"pagerank_internal_$dangling")
-      // ONE materializing pass (localCheckpoint also truncates the
-      // iters-deep lineage, so downstream plans stay flat); the (node,
-      // rank) blocks it stores are reclaimed by the ContextCleaner when
-      // the frame is garbage-collected — unlike a persist() the caller
-      // could never safely release
-      val out = ranks.select(col("node"), col("rank")).localCheckpoint(true)
-      livePersists.foreach(_.unpersist(blocking = false)) // final iterations' caches
-      out
-    } finally { nodes.unpersist(); e2.unpersist() }
+      output(edges, g, ranks.map { case (v, r) => Row(v.id, r) }, "rank")
+    } finally {
+      live.foreach(_.unpersist(blocking = false))
+      g.nodes.unpersist(blocking = false)
+    }
   }
 
   /** The "lineage has been truncated" WARN fires when the ContextCleaner
@@ -187,97 +252,69 @@ object Graph {
     * Same fixed-point discipline as [[pageRank]], with the L1
     * normalization HITS needs made integer-exact: after each half-step
     * the raw scores divide by `q = Σraw div 10^9 + 1` (one bounded scalar
-    * aggregate per half-step, the same driver-bounded class as
-    * pageRank's `n = nodes.count()`), so normalized scores sum to ≈10^9
-    * and every value is a pure Long floor-division of commuting integer
-    * sums — partition/join-order/engine independent, oracle-exact.
-    * Overflow bound: a raw score is Σ of ≈10^9-unit scores over a node's
-    * in/out edges, safe to ~4x10^9 edges per node.
+    * job per half-step, the same driver-bounded class as pageRank's node
+    * count), so normalized scores sum to ≈10^9 and every value is a pure
+    * Long floor-division of commuting integer sums — partition/join-order/
+    * engine independent, oracle-exact. Overflow bound: a raw score is Σ of
+    * ≈10^9-unit scores over a node's in/out edges, safe to ~4x10^9 edges
+    * per node.
     *
-    * Scale shape per iteration: two equi-join + partial-agg groupBy
-    * pairs (authority from src-join, hub from dst-join) — a fixed stage
-    * count over the ONE cached edge list, nothing row-wise on the driver;
-    * only the fresh scores move (broadcast while they fit).
-    *
-    * r22: scores stay SPARSE through the iterations. A node whose raw
-    * score is 0 contributes 0 to every downstream sum AND 0 to the L1
-    * total, so the per-half-step dense completion (nodes left-join +
-    * coalesce 0 — one extra join and broadcast per half-step) is pure
-    * plan weight; zeros are attached ONCE at the end. Values identical
-    * (0 div q = 0). */
+    * Per iteration: authorities are hub scores pushed along out-edges,
+    * hubs are authority scores pushed back along in-edges — two
+    * summing shuffles over the one persisted adjacency. Scores stay
+    * SPARSE through the iterations (a node that received no mass scores 0
+    * and adds 0 to every sum and to the L1 total); every node surfaces,
+    * zeros filled in, once at the end. */
   def hits(edges: DataFrame, srcCol: String, dstCol: String,
            iters: Int = 2): DataFrame = {
     require(iters >= 1 && iters <= 50, s"hits: iters must be in [1,50], got $iters")
     val HitsMass = 1000000000L
-    val e = edges
-      .select(col(srcCol).cast(LongType).as("src"), col(dstCol).cast(LongType).as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-      .distinct()
-      .persist()
-    val nodes = e.select(explode(array(col("src"), col("dst"))).as("node"))
-      .distinct().persist()
-    // r21 plan audit: every half-step join BROADCASTS the fresh score
-    // frame (node count << edge bytes) and probes the edge CACHE — the
-    // edge side is never exchanged in either clustering. The former
-    // eBySrc/eByDst pre-partitioned copies (added on the §2.4 share-one-
-    // exchange theory) therefore never paid: each cost a full repartition
-    // + columnar cache build per run while the planner ignored their
-    // partitioning. One cache serves both half-steps. (In the regime
-    // where scores outgrow the broadcast threshold — ~10^9+ nodes — the
-    // planner shifts to SMJ and per-key edge copies become worth their
-    // build; that is a planner-visible size decision, not a local tune.)
+    val g = adjacency(edges, srcCol, dstCol, withIn = true)
+    val part = g.part
+    // a half-step's raw scores are read twice (its L1 total, then the next
+    // half-step), so they are cached; a cache becomes releasable once the
+    // half-step TWO later has materialized (raw h_{k-1} feeds only a_k;
+    // raw a_{k-1} feeds only h_{k-1}, superseded by a_k)
+    var pending: List[RDD[_]] = Nil
     try {
-      require(nodes.count() > 0, "hits: edge frame has no valid edges")
-      // a half-step's cache becomes releasable once the frame TWO
-      // half-steps later has materialized (h_{k-1} feeds only a_k; a_{k-1}
-      // feeds only h_{k-1} and is superseded by a_k) — same eager-release
-      // discipline as before, with persist() instead of localCheckpoint:
-      // the L1 scalar action materializes the cache (no separate
-      // checkpoint job per half-step), partitioning stays visible to the
-      // planner, and an early release costs a recompute, not blocks.
-      var pending: List[DataFrame] = Nil
-      def normalize(raw0: DataFrame, outCol: String): DataFrame = {
-        val raw = raw0.persist()
+      require(g.n > 0, "hits: edge frame has no valid edges")
+      def normalize(raw0: RDD[(Long, Long)]): RDD[(Long, Long)] = {
+        val raw = raw0.persist(StorageLevel.MEMORY_AND_DISK)
         pending = pending :+ raw
         if (pending.size > 2) {
           pending.head.unpersist(blocking = false)
           pending = pending.tail
         }
-        // Σraw is one Long scalar (bounded driver state); div not `/` —
-        // the long `/` is double division and drops low bits past 2^53
-        val total = raw.agg(sum("raw")).head().getLong(0)
-        val q = total / HitsMass + 1
-        raw.select(col("node"), expr(s"raw div ${q}L").as(outCol))
+        // Σraw is one Long scalar (bounded driver state)
+        val q = raw.values.fold(0L)(_ + _) / HitsMass + 1
+        raw.mapValues(_ / q)
       }
-      // SPARSE half-step: rows only for nodes that received mass. Absent
-      // rows are exact zeros — they add nothing to the L1 total (q is
-      // unchanged) and produce no contributions when joined against the
-      // edges next half-step, so the dense completion can wait until the
-      // final output frame.
-      def halfStep(scores: DataFrame, scoreCol: String,
-                   joinKey: String, groupKey: String): DataFrame = {
-        val ej = e
-        scores.join(ej, scores("node") === ej(joinKey))
-          .groupBy(col(groupKey).as("node")).agg(sum(scoreCol).as("raw"))
-      }
-      var h = nodes.withColumn("h", lit(HitsMass))
-      var a: DataFrame = null
+      // SPARSE half-step: rows only for nodes that received mass
+      def halfStep(scores: RDD[(Long, Long)], toward: Node => Array[Long]): RDD[(Long, Long)] =
+        summed(g.nodes.zipPartitions(scores) { (vs, ss) =>
+          val s = mutable.LongMap.from(ss)
+          vs.flatMap(v => s.get(v.id) match {
+            case Some(x) => toward(v).iterator.map(u => (u, x))
+            case None => Iterator.empty
+          })
+        }, part)
+      var h: RDD[(Long, Long)] = g.nodes.map(v => (v.id, HitsMass))
+      var a: RDD[(Long, Long)] = null
       var it = 0
       while (it < iters) {
-        a = normalize(halfStep(h, "h", "src", "dst"), "a")
-        h = normalize(halfStep(a, "a", "dst", "src"), "h")
+        a = normalize(halfStep(h, _.out))
+        h = normalize(halfStep(a, _.in))
         it += 1
       }
       // dense completion, once: every node surfaces, zeros filled in
-      val joined = nodes
-        .join(h, Seq("node"), "left")
-        .join(a, Seq("node"), "left")
-        .select(col("node"), coalesce(col("h"), lit(0L)).as("hub"),
-          coalesce(col("a"), lit(0L)).as("authority"))
-      dumpPlan(joined, "hits_internal")
-      val out = joined.localCheckpoint(true)
-      pending.foreach(_.unpersist(blocking = false)) // final a & h caches
-      out
-    } finally { nodes.unpersist(); e.unpersist() }
+      output(edges, g, g.nodes.zipPartitions(h, a) { (vs, hs, as) =>
+        val hm = mutable.LongMap.from(hs)
+        val am = mutable.LongMap.from(as)
+        vs.map(v => Row(v.id, hm.getOrElse(v.id, 0L), am.getOrElse(v.id, 0L)))
+      }, "hub", "authority")
+    } finally {
+      pending.foreach(_.unpersist(blocking = false))
+      g.nodes.unpersist(blocking = false)
+    }
   }
 }

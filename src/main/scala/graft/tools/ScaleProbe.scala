@@ -36,7 +36,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.functions.{Corpus, Dedup, Images, Sampling, TextFunctions}
+import graft.functions.{Corpus, Dedup, Graph, Images, Sampling, TextFunctions}
 import graft.ops.Ops
 
 object ScaleProbe {
@@ -76,6 +76,13 @@ object ScaleProbe {
   // like the gate fixtures' id % 250 rule would grow group sizes with the
   // corpus and the PAIR count quadratically)
   private def dupSeed(id: Long): Long = if (id % 100 < 2) (id / 100) * 100 else id
+
+  /** The graph gates' supplier -> part link graph over the lineitem fixture:
+    * four suppliers per part out of 10,000 (TPC-H's partsupp rule), so
+    * ~800k distinct edges over ~200k nodes behind 6M rows. */
+  private def supplierPart(df: DataFrame): DataFrame =
+    df.select(((col("l_partkey") + pmod(col("l_orderkey"), lit(4L)) * 2500L) % 10000L + 1L)
+      .as("l_suppkey"), col("l_partkey"))
 
   val Legs: Seq[Leg] = Seq(
     // fixed stop-token cap (the production guard): binding only on the head
@@ -336,6 +343,13 @@ object ScaleProbe {
     Leg("zorder", Lineitem, in => () =>
       graft.functions.Zorder.zorderBy(in.df.select("l_orderkey", "l_partkey", "l_quantity"),
         Seq("l_partkey", "l_quantity"))),
+    Leg("pagerank", Lineitem, in => () =>
+      Graph.pageRank(supplierPart(in.df), "l_suppkey", "l_partkey", iters = 3)),
+    Leg("pagerank_dangling", Lineitem, in => () =>
+      Graph.pageRank(supplierPart(in.df), "l_suppkey", "l_partkey", iters = 3,
+        dangling = "redistribute")),
+    Leg("hits", Lineitem, in => () =>
+      Graph.hits(supplierPart(in.df), "l_suppkey", "l_partkey", iters = 2)),
     Leg("dedup_exact", Events, in => () =>
       Dedup.exactGroups(
         in.df.withColumn("k", concat_ws("|", col("user_id"), col("event_type"), col("value"))),
@@ -431,6 +445,7 @@ object ScaleProbe {
     val legs = Legs.filter(l => only.forall(_.contains(l.name)))
     val spark = graft.Session.build()
     spark.sparkContext.setLogLevel("WARN")
+    Graph.quietCheckpointReleaseWarns() // each leg's cleanup releases the graph legs' checkpoints
     spark.range(1000000).selectExpr("sum(id)").write.format("noop").mode("overwrite").save()
 
     for {

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -33,6 +34,29 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     val now = persistentRdds
     ((now.keySet -- before.keySet).toSeq.sorted.map(id => s"\n  + rdd $id ${now(id)}") ++
       (before.keySet -- now.keySet).toSeq.sorted.map(id => s"\n  - rdd $id ${before(id)}")).mkString
+  }
+
+  /** Spark jobs `body` starts on this thread. A sentinel job after it
+    * flushes the listener bus: events reach a listener in order. */
+  def jobsDuring(body: => Any): Int = {
+    val sc = spark.sparkContext
+    val group = s"counted-${System.nanoTime}"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.add(String.valueOf(Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group-end", "sentinel")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime + 30000000000L
+      while (!seen.contains(s"$group-end") && System.nanoTime < deadline) Thread.sleep(10)
+      assert(seen.contains(s"$group-end"), "listener bus did not deliver the sentinel job")
+      seen.toArray.count(_ == group)
+    } finally sc.removeSparkListener(listener)
   }
 }
 

@@ -51,30 +51,6 @@ class SourcesSpec extends SparkSpec {
     assert(df.count() == 1)
   }
 
-  /** Spark jobs `body` starts on this thread. A sentinel job after it
-    * flushes the listener bus: events reach a listener in order. */
-  private def jobsDuring(body: => Unit): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val group = s"counted-${System.nanoTime}"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        seen.add(String.valueOf(Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull))
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "counted")
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup(s"$group-end", "sentinel")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime + 30000000000L
-      while (!seen.contains(s"$group-end") && System.nanoTime < deadline) Thread.sleep(10)
-      assert(seen.contains(s"$group-end"), "listener bus did not deliver the sentinel job")
-      seen.toArray.count(_ == group)
-    } finally sc.removeSparkListener(listener)
-  }
-
   /** The CSV options `Sources` reads delimited files with, plus Spark's
     * header inference: the header path `header_rows: 1` used to take. */
   private def inferred(file: java.nio.file.Path) = spark.read

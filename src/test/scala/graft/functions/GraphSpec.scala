@@ -1,16 +1,81 @@
 package graft.functions
 
+import scala.collection.mutable
+
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-/** Fixed-point PageRank: closed-form graphs, exact partition independence
-  * (the property the integer arithmetic buys), mass accounting, and the
+/** Fixed-point PageRank and HITS: closed-form graphs, exact partition
+  * independence (the property the integer arithmetic buys), exactness
+  * against a plain-Scala model, mass accounting, the job budget, and the
   * YAML dispatch. */
 class GraphSpec extends SparkSpec {
 
   private def edges(pairs: (Long, Long)*) = {
     import spark.implicits._
     pairs.toDF("src", "dst")
+  }
+
+  /** A seeded 300-row edge frame of strings: duplicate edges, self-loops,
+    * null endpoints, dst-only (dangling) nodes, and numbers in the forms a
+    * cast accepts (" 7", "+7", "007"). */
+  private val messy: Seq[(String, String)] = {
+    val rnd = new scala.util.Random(20261019)
+    def fmt(v: Long): String = rnd.nextInt(4) match {
+      case 0 => s" $v"
+      case 1 => s"+$v"
+      case 2 => f"$v%03d"
+      case _ => v.toString
+    }
+    val links = Seq.fill(240)((rnd.nextInt(50).toLong, rnd.nextInt(50).toLong))
+    val sinks = Seq.fill(20)((rnd.nextInt(50).toLong, 100L + rnd.nextInt(10)))
+    val loops = Seq.fill(10)(rnd.nextInt(50).toLong).map(v => (v, v))
+    val typed = (links ++ sinks ++ loops ++ links.take(20)).map { case (s, d) => (fmt(s), fmt(d)) }
+    val nulls = Seq.tabulate(10)(i => if (i % 3 == 0) (null, s"$i") else if (i % 3 == 1) (s"$i", null)
+      else (null, null))
+    typed ++ nulls
+  }
+
+  private def messyFrame = {
+    import spark.implicits._
+    messy.toDF("src", "dst")
+  }
+
+  /** The edges the model reads: nulls dropped, numbers parsed, duplicates once. */
+  private val messyEdges: Set[(Long, Long)] = messy.collect {
+    case (s, d) if s != null && d != null => (s.trim.toLong, d.trim.toLong)
+  }.toSet
+
+  /** PageRank's fixed-point rules over plain Scala maps. */
+  private def modelPageRank(es: Set[(Long, Long)], iters: Int, d: Long,
+                            redistribute: Boolean): Map[Long, Long] = {
+    val nodes = es.flatMap { case (s, t) => Seq(s, t) }
+    val n = nodes.size.toLong
+    val outs = es.groupMap(_._1)(_._2)
+    val base = (Graph.Mass * (1000000L - d) / 1000000L) / n
+    var ranks = nodes.map(_ -> Graph.Mass / n).toMap
+    for (_ <- 1 to iters) {
+      val in = mutable.Map.empty[Long, Long].withDefaultValue(0L)
+      for ((s, ts) <- outs; t <- ts) in(t) += ranks(s) * d / (1000000L * ts.size)
+      val dm = if (redistribute) nodes.toSeq.filterNot(outs.contains).map(ranks).sum else 0L
+      val share = base + dm * d / 1000000L / n
+      ranks = nodes.map(v => v -> (share + in(v))).toMap
+    }
+    ranks
+  }
+
+  /** HITS's fixed-point rules over plain Scala maps: node -> (hub, authority). */
+  private def modelHits(es: Set[(Long, Long)], iters: Int): Map[Long, (Long, Long)] = {
+    val m = 1000000000L
+    val nodes = es.flatMap { case (s, t) => Seq(s, t) }
+    def norm(raw: Map[Long, Long]) = { val q = raw.values.sum / m + 1; raw.map { case (k, v) => k -> v / q } }
+    var h = nodes.map(_ -> m).toMap
+    var a = Map.empty[Long, Long]
+    for (_ <- 1 to iters) {
+      a = norm(es.toSeq.filter(e => h.contains(e._1)).groupMapReduce(_._2)(e => h(e._1))(_ + _))
+      h = norm(es.toSeq.filter(e => a.contains(e._2)).groupMapReduce(_._1)(e => a(e._2))(_ + _))
+    }
+    nodes.map(v => v -> (h.getOrElse(v, 0L), a.getOrElse(v, 0L))).toMap
   }
 
   test("symmetric cycle: every node holds exactly the same rank at every iteration") {
@@ -149,5 +214,56 @@ class GraphSpec extends SparkSpec {
       assert(Await.result(f1, 180.seconds) == expectPr)
       assert(Await.result(f2, 180.seconds) == expectHits)
     }
+  }
+
+  test("pageRank and hits equal a plain-Scala Long model on a messy 300-row edge frame") {
+    val g = messyFrame
+    assert(messyEdges.exists { case (s, d) => s == d }, "fixture has self-loops")
+    assert(messyEdges.exists { case (_, d) => !messyEdges.exists(_._1 == d) }, "fixture has dangling nodes")
+    for ((iters, d) <- Seq((3, 850000L), (5, 600000L))) {
+      val drop = Graph.pageRank(g, "src", "dst", iters, d)
+      assert(drop.schema.map(f => f.name -> f.nullable) == Seq("node" -> true, "rank" -> false))
+      assert(drop.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+        modelPageRank(messyEdges, iters, d, redistribute = false), s"drop iters=$iters d=$d")
+      assert(Graph.pageRank(g, "src", "dst", iters, d, "redistribute").collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+        modelPageRank(messyEdges, iters, d, redistribute = true), s"redistribute iters=$iters d=$d")
+    }
+    val hits = Graph.hits(g, "src", "dst", 3)
+    assert(hits.schema.map(f => f.name -> f.nullable) ==
+      Seq("node" -> true, "hub" -> false, "authority" -> false))
+    assert(hits.collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap ==
+      modelHits(messyEdges, 3))
+    // typed non-null input keeps a non-nullable node column
+    assert(!Graph.pageRank(edges(1L -> 2L), "src", "dst", 1).schema("node").nullable)
+    // a non-numeric endpoint fails the cast as it does in any graft frame
+    // (ANSI casts are on), rather than dropping the edge
+    import spark.implicits._
+    val bad = intercept[NumberFormatException](
+      Graph.pageRank(Seq(("1", "2"), ("x", "1")).toDF("src", "dst"), "src", "dst", 2))
+    assert(bad.getMessage.contains("CAST_INVALID_INPUT"), bad.getMessage)
+  }
+
+  test("job budget: pageRank drop mode runs a fixed two jobs, redistribute and hits one per scalar") {
+    val g = messyFrame
+    val drop1 = jobsDuring(Graph.pageRank(g, "src", "dst", 1))
+    val drop6 = jobsDuring(Graph.pageRank(g, "src", "dst", 6))
+    assert(drop1 == drop6 && drop6 <= 2, s"drop mode ran $drop1 jobs at iters=1, $drop6 at iters=6")
+    for (iters <- Seq(2, 5)) {
+      val red = jobsDuring(Graph.pageRank(g, "src", "dst", iters, dangling = "redistribute"))
+      assert(red <= iters + 2, s"redistribute ran $red jobs at iters=$iters")
+      val hits = jobsDuring(Graph.hits(g, "src", "dst", iters))
+      assert(hits <= 2 * iters + 2, s"hits ran $hits jobs at iters=$iters")
+    }
+  }
+
+  test("graph calls leave no cache behind but their output's checkpoint") {
+    val before = persistentRdds
+    val outs = Seq(Graph.pageRank(messyFrame, "src", "dst", 3, dangling = "redistribute"),
+      Graph.hits(messyFrame, "src", "dst", 3))
+    val added = persistentRdds.keySet -- before.keySet
+    // one localCheckpoint RDD per output; every adjacency and score cache is gone
+    assert(added.size == outs.size, rddChanges(before))
+    assert(outs.map(_.count()).distinct.size == 1, "both outputs list every node")
   }
 }
