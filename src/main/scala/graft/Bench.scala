@@ -236,12 +236,7 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = Session.cpus
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt.max(1)
-    val spark = Session.build()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.Graph.quietCheckpointReleaseWarns()
-
-    // JVM/codegen warmup so the first measured query isn't charged for it
-    spark.range(1000000).selectExpr("sum(id)").write.format("noop").mode("overwrite").save()
+    val spark = Session.harness(warm = true)
 
     def time(f: => Unit): Double = {
       val t0 = System.nanoTime()
@@ -291,19 +286,9 @@ object Bench {
           System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
         }
       }
-      // drop caches persisted inside operators (dedup signature frames, CC
-      // labels) so reps and queries don't evict each other and every rep
-      // does the full work
-      spark.catalog.clearCache()
-      // clearCache() covers Dataset-level persists only. localCheckpoint()ed
-      // RDDs (pagerank/hits lineage cuts, CC loops) live in the RDD-level
-      // persistentRdds map and are otherwise reclaimed only when the driver
-      // GCs the Dataset and the ContextCleaner gets around to it — in a
-      // single local-mode JVM running 200+ queries x 4 passes those blocks
-      // accumulate in the shared block manager and slow late reps (the
-      // round-17 q_pagerank 6.7->7.4->8.1 monotone-rep artifact). Nothing
-      // from a finished rep is ever recomputed, so drop them eagerly.
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+      // drop the rep's operator caches (the round-17 q_pagerank
+      // 6.7->7.4->8.1 monotone-rep artifact was leftover checkpoint blocks)
+      Session.releaseCaches(spark)
       gcSamples(name) = gcSamples.getOrElse(name, Vector.empty) :+ (gcMs() - gc0) / 1000.0
       storeSamples(name) = storeSamples.getOrElse(name, Vector.empty) :+
         spark.sparkContext.getExecutorMemoryStatus.values

@@ -8,19 +8,7 @@ import org.apache.spark.sql.SparkSession
   *
   * `SPARK_GRAFT_CPUS` (default 4) sizes local mode and the shuffle
   * partitions; `SPARK_MASTER`, a deployment setting, overrides the master.
-  *
-  * Defaults kept on purpose (r21 A/Bs on the graph/dedup subset):
-  *  - `spark.sql.join.preferSortMergeJoin=false` (plus the AQE shuffled-hash
-  *    local-map threshold) was A/B'd 2×2 to kill the per-iteration sorts of
-  *    the cached edge frame; deltas stayed inside window noise (17.5-17.9 vs
-  *    17.3-19.8 s totals, q_hits slightly WORSE under SHJ), so the default
-  *    stays.
-  *  - `spark.sql.optimizer.canChangeCachedPlanOutputPartitioning=true` was
-  *    tried to let AQE re-coalesce the tiny cached graph/dedup frames — it
-  *    consistently REGRESSED the graph loops (q_pagerank 2.9-3.0 -> 3.1-4.1 s
-  *    across four alternating runs: coalescing the cache breaks the src/node
-  *    co-partitioning the per-iteration joins rely on, re-adding exchanges).
-  *    Default (false) kept deliberately. */
+  * A key not in `settings` keeps Spark's default. */
 object Session {
   def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
 
@@ -44,4 +32,27 @@ object Session {
     "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> AqeMinPartitionSize)
 
   def build(): SparkSession = SparkSession.builder().config(settings).getOrCreate()
+
+  /** The session a harness main (Bench, Verify, PlanAudit, ProfileQuery,
+    * ScaleProbe) runs on: Spark logging at `logLevel`, the graph loops'
+    * checkpoint-release warnings quiet, and with `warm` a 1M-row noop job
+    * first, so the first measured query is not charged for JVM and codegen
+    * warm-up. */
+  def harness(logLevel: String = "WARN", warm: Boolean = false): SparkSession = {
+    val spark = build()
+    spark.sparkContext.setLogLevel(logLevel)
+    graft.functions.Graph.quietCheckpointReleaseWarns()
+    if (warm) spark.range(1000000).selectExpr("sum(id)").write.format("noop").mode("overwrite").save()
+    spark
+  }
+
+  /** Drops every cache a finished query left, so the next one does the full
+    * work. `clearCache()` reaches Dataset-level persists only; RDD-level
+    * ones (localCheckpoint()ed graph and connected-components lineage)
+    * would otherwise wait for the ContextCleaner and pile up in the block
+    * manager over hundreds of queries. */
+  def releaseCaches(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+  }
 }

@@ -9,9 +9,7 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val spark = Session.build()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.Graph.quietCheckpointReleaseWarns()
+    val spark = Session.harness()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }

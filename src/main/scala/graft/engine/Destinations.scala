@@ -16,10 +16,10 @@ import graft.template.{Jinja, RowTemplates}
  * output-side collapsing would corrupt.
  *
  * Two output modes:
- *  - single-file (reference parity): rendering is distributed; the final
- *    framing streams partition iterators through the driver
- *    (toLocalIterator — one partition in memory at a time, like the
- *    reference's partition loop);
+ *  - single-file (reference parity): the rendered rows are written as
+ *    text parts in parallel, then the driver concatenates the parts in
+ *    partition order into `{name}.{extension}`, with the header and footer
+ *    around them;
  *  - partitioned (`partitioned: true`): df.write.text emits one part per
  *    partition — the only shape that makes sense at 100 TB, where a single
  *    output file is itself the bottleneck.

@@ -138,15 +138,16 @@ final class Engine(spark: SparkSession) {
       plan.dag.edges.groupBy(_._1).view.mapValues(_.size).toMap.withDefaultValue(0)
     val sc = spark.sparkContext
 
-    // show_progress (node.py:59-60): stage-level progress for the run's span
+    // show_progress (node.py:59-60): one line per stage of the run, naming
+    // the node whose job ran it; the run returns after the last line
     val showProgress = Config.bool(plan.project.config, "show_progress") ||
       order.exists(f => Config.bool(plan.nodeConfig(f), "show_progress"))
-    val progress: Option[Progress] =
-      if (showProgress) {
-        val l = new Progress(Console.err) // capture the caller's stderr once
-        sc.addSparkListener(l)
-        Some(l)
-      } else None
+    val err = Console.err // the listener-bus thread does not see the caller's binding
+    def progress(body: => Unit): Unit =
+      if (!showProgress) body
+      else graft.Metrics.collect(spark, (s, job) =>
+        err.println(s"[progress] stage ${s.id} (${s.name.takeWhile(_ != '(').trim}): " +
+          s"${s.tasks} tasks, ${s.runMs} ms" + (if (job.nonEmpty) s" — $job" else "")))(body)
 
     // a task of the node at topological index i tags its jobs with i, so a
     // failure can cancel exactly the nodes after it
@@ -168,7 +169,7 @@ final class Engine(spark: SparkSession) {
       } finally running.remove(i)
     }
 
-    graft.Persisted.scope {
+    progress(graft.Persisted.scope {
       val threads = new ConcurrentLinkedQueue[Thread]()
       val width = math.max(1, math.min(order.size, graft.Session.cpus.toInt))
       val pool = new ThreadPoolExecutor(width, width, 0L, TimeUnit.MILLISECONDS,
@@ -204,9 +205,8 @@ final class Engine(spark: SparkSession) {
       } finally {
         pool.shutdown()
         threads.forEach(_.join())
-        progress.foreach(sc.removeSparkListener)
       }
-    }
+    })
     failures.get(failedAt.get).foreach(e => throw e)
     RunResult(SeqMap.from(order.flatMap(n => written.get(n).map(n -> _))), counts.toMap)
   }
@@ -246,7 +246,7 @@ final class Engine(spark: SparkSession) {
         frames(full) = postProcess(result, cfg, full)
       case "destinations" =>
         val src = frames(resolveRef(Config.reqStr(cfg, "source", full)))
-        // name the jobs so progress lines / Spark UI attribute to the node
+        // name the jobs so progress lines and the Spark UI name the node
         spark.sparkContext.setJobDescription(s"graft: $full")
         try written(full) = Destinations.write(src, name, cfg, outDir, plan.project.configDir)
         finally spark.sparkContext.setJobDescription(null)
@@ -269,10 +269,6 @@ final class Engine(spark: SparkSession) {
     df
   }
 
-  /** Per-operation allowed config keys (the reference's `allowed_configs`
-    * tuples across operations/column.py, dataframe.py, groupby.py, row.py),
-    * plus this engine's documented extensions. Unknown keys warn —
-    * misspelled configs should not pass silently (node.py:63-69). */
   /** Node-level allowed keys (node.py:28, source.py:28,108,463,527,
     * transformation.py:12, destination.py:19,52 + engine extensions). */
   private val nodeKeys: Map[String, Set[String]] = Map(
@@ -289,14 +285,20 @@ final class Engine(spark: SparkSession) {
       "bucket_by", "sort_by", "table"))
 
   private val baseOpKeys = Set("operation", "repartition")
+  /** Every YAML operation with its allowed config keys (the reference's
+    * `allowed_configs` tuples across operations/column.py, dataframe.py,
+    * groupby.py, row.py), plus this engine's documented extensions. It is
+    * the list of operation names: `applyOperation` rejects a name with no
+    * entry, and warns on a key not listed — misspelled configs should not
+    * pass silently (node.py:63-69). */
   private val allowedOpKeys: Map[String, Set[String]] = Map(
     "add_columns" -> Set("columns"),
     "modify_columns" -> Set("columns"),
     "duplicate_columns" -> Set("columns"),
     "rename_columns" -> Set("columns"),
-    "drop_columns" -> Set("columns"),
-    "keep_columns" -> Set("columns"),
-    "combine_columns" -> Set("columns", "new_column", "separator"),
+    "drop_columns" -> Set("column", "columns"),
+    "keep_columns" -> Set("column", "columns"),
+    "combine_columns" -> Set("column", "columns", "new_column", "separator"),
     "map_values" -> Set("column", "columns", "mapping", "map_file"),
     "date_format" -> Set("column", "columns", "from_format", "to_format", "ignore_errors", "exact_match"),
     "snake_case_columns" -> Set(),
@@ -321,7 +323,7 @@ final class Engine(spark: SparkSession) {
       "new_column", "rows_preceding", "rows_following", "offset"),
     "distinct_rows" -> Set("column", "columns"),
     "filter_rows" -> Set("query", "behavior"),
-    "sort_rows" -> Set("columns", "descending"),
+    "sort_rows" -> Set("column", "columns", "descending"),
     "limit_rows" -> Set("count", "offset"),
     "flatten" -> Set("flatten_column", "left_wrapper", "right_wrapper", "separator",
       "value_column", "trim_whitespace"),
@@ -359,6 +361,9 @@ final class Engine(spark: SparkSession) {
     "text_stats" -> Set("column", "stopwords"),
     "repetition_stats" -> Set("column", "line_delimiter", "ngram"),
     "quality_score" -> Set("column", "new_column", "stopwords"),
+    "quality_filter" -> Set("column", "min_words", "max_words"),
+    "html_to_text" -> Set("column"),
+    "c4_clean" -> Set("column", "min_line_words", "min_lines"),
     "fingerprint" -> Set("column", "new_column"),
     "chunk" -> Set("id_column", "column", "chunk_words", "overlap_words"),
     "dedup_exact" -> Set("id_column", "column"),
@@ -434,13 +439,6 @@ final class Engine(spark: SparkSession) {
     }.drop(m)
   }
 
-  private def warnUnknownKeys(op: Map[String, Any], name: String, ctx: String): Unit =
-    allowedOpKeys.get(name).foreach { allowed =>
-      (op.keySet -- allowed -- baseOpKeys).foreach { k =>
-        Console.err.println(s"[warn] Config `$k` not defined for operation `$name` ($ctx).")
-      }
-    }
-
   /** YAML `operation:` dispatch — the reference's 22-entry operation table
     * (operations/operation.py:30-58) mapped onto graft.ops.Ops. */
   def applyOperation(df: DataFrame, op: Map[String, Any],
@@ -456,7 +454,11 @@ final class Engine(spark: SparkSession) {
       Config.asList(op.getOrElse("sources", Nil)).map(s => frames(resolveRef(s.toString)))
 
     val name = Config.reqStr(op, "operation", ctx)
-    warnUnknownKeys(op, name, ctx)
+    val allowed = allowedOpKeys.getOrElse(name,
+      throw new IllegalArgumentException(s"$ctx: unknown operation `$name`"))
+    (op.keySet -- allowed -- baseOpKeys).foreach { k =>
+      Console.err.println(s"[warn] Config `$k` not defined for operation `$name` ($ctx).")
+    }
     val result = name match {
       case "add_columns" => Ops.addColumns(df, pairs("columns"))
       case "modify_columns" => Ops.modifyColumns(df, pairs("columns"))
@@ -1455,7 +1457,6 @@ final class Engine(spark: SparkSession) {
           idC, Config.reqStr(op, "column", ctx),
           Config.int(op, "shingle_size").getOrElse(5))
         df.join(contaminated.select(idC), Seq(idC), "left_anti")
-      case other => throw new IllegalArgumentException(s"$ctx: unknown operation `$other`")
     }
     Config.int(op, "repartition") match {
       case Some(n) => result.repartition(n)

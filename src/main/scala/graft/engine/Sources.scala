@@ -10,7 +10,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.catalyst.csv.CSVOptions
 import org.apache.spark.sql.execution.datasources.csv.CSVUtils
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
@@ -119,6 +119,8 @@ object Sources {
     // Spark's own file readers get a glob's matches: handed the pattern,
     // Spark stats it as one path and logs a false "does not exist" trace
     val paths = matches.map(_.getPath.toString)
+    def texts(unit: String, column: String = "text")(extract: Array[Byte] => Vector[String]) =
+      readUnits(spark, path, matches, unit, strings(column))(extract(_).map(Seq(_)))
     ext match {
       case "csv" => readDelimited(spark, path, matches, ",", cfg, columns)
       case "tsv" => readDelimited(spark, path, matches, "\t", cfg, columns)
@@ -151,28 +153,33 @@ object Sources {
       case "sav" | "zsav" | "spss" => Spss.read(spark, path)
       case "pkl" | "pickle" => Pickle.read(spark, path)
       case "avro" => Avro.readAny(spark, path) // file OR the sink's part-file dir
-      case "warc" | "wet" => Warc.read(spark, path)
+      case "warc" | "wet" => Warc.read(spark, path, matches)
       // PDF text extraction (beyond-reference crawl source): distributed
       // file-level parallelism like WARC — one row per page (file, page,
       // text), pages in page-tree order
-      case "pdf" => readPdf(spark, path)
+      case "pdf" => texts("page")(Pdf.extractText)
       // OOXML text extraction (beyond-reference, the Office share of a
       // document crawl): same distribution shape — one row per paragraph
       // (docx) or slide (pptx)
-      case "docx" => readOoxmlText(spark, path, "paragraph", Docx.extractParagraphs)
-      case "pptx" => readOoxmlText(spark, path, "slide", Docx.extractSlides)
-      case "rtf" => readOoxmlText(spark, path, "paragraph", Rtf.extractParagraphs)
-      case "doc" => readOoxmlText(spark, path, "paragraph", Doc.extractParagraphs)
+      case "docx" => texts("paragraph")(Docx.extractParagraphs)
+      case "pptx" => texts("slide")(Docx.extractSlides)
+      case "rtf" => texts("paragraph")(Rtf.extractParagraphs)
+      case "doc" => texts("paragraph")(Doc.extractParagraphs)
       // epub emits chapter MARKUP in spine order; `html_to_text` is the
       // extraction step (composes like the WARC/html crawl path)
-      case "epub" => readOoxmlText(spark, path, "chapter", Epub.extractChapters, "html")
+      case "epub" => texts("chapter", "html")(Epub.extractChapters)
       // subtitle cues: (file, cue, start_ms, end_ms, text) — the
       // transcript side of a speech/video corpus, integer-exact bounds
-      case "srt" => readSubtitles(spark, path, Subtitles.parseSrt)
-      case "vtt" => readSubtitles(spark, path, Subtitles.parseVtt)
+      case "srt" | "vtt" => readUnits(spark, path, matches, "cue", Seq(StructField("start_ms", LongType),
+        StructField("end_ms", LongType), StructField("text", StringType))) { b =>
+        (if (ext == "srt") Subtitles.parseSrt(b) else Subtitles.parseVtt(b)).map { case (s, e, t) => Seq(s, e, t) }
+      }
       // mail archives: one row per message with decoded headers + first
       // text/plain MIME leaf
-      case "eml" => readMail(spark, path, b => Vector(Eml.parseEml(b)))
+      case "eml" => readUnits(spark, path, matches, "message", mailColumns) { b =>
+        val m = Eml.parseEml(b)
+        Vector(Seq(m.subject, m.from, m.date, m.text))
+      }
       // mbox archives are typically ONE giant file (no WARC-style ~1 GiB
       // convention), so the unit of parallelism must be the HDFS split,
       // not the file: record-delimiter read on the `\nFrom ` separator
@@ -181,7 +188,7 @@ object Sources {
       // ~1 GiB tar files of key.ext members): one row per member with the
       // key/ext split, payload as a binary column for the doc_text /
       // decode_text / image_* expression tier
-      case "tar" | "tgz" | "zip" => readArchive(spark, path)
+      case "tar" | "tgz" | "zip" => readArchive(spark, path, matches)
       case other =>
         throw new IllegalArgumentException(s"unsupported source file type `$other` ($path)")
     }
@@ -223,7 +230,8 @@ object Sources {
     def schema(names: Seq[String]) = StructType(names.map(n => StructField(n, StringType)))
     /** Distributed body parse with known names, dropping each file's first `skip` lines. */
     def body(names: Seq[String], skip: Int): DataFrame =
-      base.schema(schema(names)).csv(linesAfter(spark, dataFiles(spark, matches).toSeq, skip)).na.fill("")
+      base.schema(schema(names)).csv(linesAfter(spark, dataFiles(spark, matches).toSeq, skip, encoding))
+        .na.fill("")
 
     cfg.getOrElse("header_rows", 1) match {
       case l: List[_] =>
@@ -311,14 +319,16 @@ object Sources {
   }
 
   /** The lines of `files` with each file's first `skip` physical lines
-    * dropped, as one Hadoop text scan split as `sc.textFile` splits. The
+    * dropped, each decoded with `encoding` in its task, as one Hadoop text
+    * scan split as `sc.textFile` splits. The
     * driver reads each file's first `skip` lines to learn the byte offset
     * its body starts at; a task keeps a line when its key (the line's
     * offset in the decompressed stream) is at or past that offset. So the
     * right lines go however a file splits, also when the skipped lines span
     * a split boundary (SourcesSpec pins it with a forced multi-split read),
     * and K files cost K small driver reads, not K scans. */
-  private def linesAfter(spark: SparkSession, files: Seq[HPath], skip: Int): Dataset[String] = {
+  private def linesAfter(spark: SparkSession, files: Seq[HPath], skip: Int,
+                         encoding: String): Dataset[String] = {
     import spark.implicits._
     val sc = spark.sparkContext
     val bodyStart = files.map(f =>
@@ -329,7 +339,8 @@ object Sources {
       .asInstanceOf[org.apache.spark.rdd.HadoopRDD[LongWritable, Text]]
       .mapPartitionsWithInputSplit { (split, lines) =>
         val start = bodyStart(split.asInstanceOf[FileSplit].getPath.toUri.getPath)
-        lines.collect { case (offset, line) if offset.get >= start => line.toString }
+        lines.collect { case (offset, line) if offset.get >= start =>
+          new String(line.getBytes, 0, line.getLength, encoding) }
       }.toDS()
   }
 
@@ -566,7 +577,7 @@ object Sources {
       throw new IllegalArgumentException(s"fixedwidth: ${names.size} names but ${colspecs.size} colspecs")
     val headerRows = Config.int(cfg, "header_rows").getOrElse(0)
     val text =
-      if (headerRows > 0) linesAfter(spark, dataFiles(spark, matches).toSeq, headerRows).toDF("value")
+      if (headerRows > 0) linesAfter(spark, dataFiles(spark, matches).toSeq, headerRows, "UTF-8").toDF("value")
       else spark.read.text(matches.map(_.getPath.toString): _*)
     text.select(names.zip(colspecs).map { case (n, (a, b)) =>
       trim(substring(col("value"), a + 1, b - a)).as(n)
@@ -706,24 +717,24 @@ object Sources {
     * 3.6 MB of split bytes and OOMs the executor).
     *
     * Since every consumer reads WHOLE files, the unit of work is the
-    * path: glob on the driver (one FileSystem listing, same as
-    * binaryFiles' own setup), parallelize the sorted path strings across
+    * path: take the matches `read` globbed once (a directory match is
+    * listed, as binaryFiles lists it), parallelize the sorted path strings across
     * the default parallelism, and open each file in its own task through
     * a Configuration rebuilt from a broadcast key/value snapshot (public
     * API only — Hadoop Configuration itself is not serializable). On a
     * real cluster this trades HDFS block locality for even file-count
     * balance — the right trade for whole-file document reads, where
     * files are small and remote-read cost is dwarfed by parse cost. */
-  private[engine] def binaryFilesSpread(spark: SparkSession, pathGlob: String)
+  private[engine] def binaryFilesSpread(spark: SparkSession, path: String, matches: Seq[FileStatus])
       : org.apache.spark.rdd.RDD[(String, () => java.io.InputStream)] = {
     val sc = spark.sparkContext
-    val fs = new HPath(pathGlob).getFileSystem(sc.hadoopConfiguration)
-    val files = globMatches(spark, pathGlob).flatMap { st =>
-      if (st.isDirectory) fs.listStatus(st.getPath).filter(_.isFile).toSeq
+    val files = matches.flatMap { st =>
+      if (st.isDirectory)
+        st.getPath.getFileSystem(sc.hadoopConfiguration).listStatus(st.getPath).filter(_.isFile).toSeq
       else Seq(st)
     }.map(_.getPath.toString).sorted
     if (files.isEmpty)
-      throw new IllegalArgumentException(s"no input files match $pathGlob")
+      throw new IllegalArgumentException(s"no input files match $path")
     val confSnapshot = sc.hadoopConfiguration.asScala
       .map(e => (e.getKey, e.getValue)).toArray
     val bconf = sc.broadcast(confSnapshot)
@@ -738,98 +749,31 @@ object Sources {
     }
   }
 
-  /** Drain an open-thunk to bytes (closes the stream). */
-  private def readAll(open: () => java.io.InputStream): Array[Byte] = {
-    val in = open()
-    try in.readAllBytes() finally in.close()
-  }
-
-  /** PDF pages via binaryFiles (the WARC distributed-file pattern): each
-    * document parses in its own task; unreadable documents raise with the
-    * file name (the engine's diagnosable-error contract). */
-  private def readPdf(spark: SparkSession, pathGlob: String): DataFrame = {
+  /** Documents read as one row per unit (page, paragraph, slide, chapter,
+    * cue, message): each file is extracted in its own task into
+    * (file, `unit` 1-based in document order, `values`...). An extraction
+    * error is raised with the file name (the engine's diagnosable-error
+    * contract). */
+  private def readUnits(spark: SparkSession, path: String, matches: Seq[FileStatus], unit: String,
+                        values: Seq[StructField])(extract: Array[Byte] => Vector[Seq[Any]]): DataFrame = {
     import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-    val rows = binaryFilesSpread(spark, pathGlob).flatMap { case (file, open) =>
-      val bytes = readAll(open)
-      val pages =
-        try Pdf.extractText(bytes)
-        catch { case e: IllegalArgumentException =>
-          throw new IllegalArgumentException(s"$file: ${e.getMessage}", e)
-        }
-      pages.zipWithIndex.map { case (text, i) => Row(file, (i + 1).toLong, text) }
-    }
-    val schema = StructType(Seq(
-      StructField("file", StringType), StructField("page", LongType),
-      StructField("text", StringType)))
-    spark.createDataFrame(rows, schema)
-  }
-
-  /** docx/pptx: file-level parallel extraction, one row per unit
-    * (paragraph or slide) — (file, `unitCol`, text), units 1-based in
-    * document order. */
-  private def readOoxmlText(spark: SparkSession, pathGlob: String, unitCol: String,
-                            extract: Array[Byte] => Vector[String],
-                            valueCol: String = "text"): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-    val rows = binaryFilesSpread(spark, pathGlob).flatMap { case (file, open) =>
+    val rows = binaryFilesSpread(spark, path, matches).flatMap { case (file, open) =>
+      val in = open()
       val units =
-        try extract(readAll(open))
+        try extract(try in.readAllBytes() finally in.close())
         catch { case e: IllegalArgumentException =>
           throw new IllegalArgumentException(s"$file: ${e.getMessage}", e)
         }
-      units.zipWithIndex.map { case (text, i) => Row(file, (i + 1).toLong, text) }
+      units.zipWithIndex.map { case (v, i) => Row.fromSeq(file +: (i + 1).toLong +: v) }
     }
-    val schema = StructType(Seq(
-      StructField("file", StringType), StructField(unitCol, LongType),
-      StructField(valueCol, StringType)))
-    spark.createDataFrame(rows, schema)
+    spark.createDataFrame(rows,
+      StructType(StructField("file", StringType) +: StructField(unit, LongType) +: values))
   }
 
-  /** srt/vtt: one row per cue with integer millisecond bounds. */
-  private def readSubtitles(spark: SparkSession, pathGlob: String,
-                            extract: Array[Byte] => Vector[(Long, Long, String)]): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-    val rows = binaryFilesSpread(spark, pathGlob).flatMap { case (file, open) =>
-      val cues =
-        try extract(readAll(open))
-        catch { case e: IllegalArgumentException =>
-          throw new IllegalArgumentException(s"$file: ${e.getMessage}", e)
-        }
-      cues.zipWithIndex.map { case ((s, e, text), i) =>
-        Row(file, (i + 1).toLong, s, e, text)
-      }
-    }
-    val schema = StructType(Seq(
-      StructField("file", StringType), StructField("cue", LongType),
-      StructField("start_ms", LongType), StructField("end_ms", LongType),
-      StructField("text", StringType)))
-    spark.createDataFrame(rows, schema)
-  }
+  private def strings(names: String*): Seq[StructField] = names.map(StructField(_, StringType))
 
-  /** eml/mbox: one row per message, decoded headers + text/plain body. */
-  private def readMail(spark: SparkSession, pathGlob: String,
-                       extract: Array[Byte] => Vector[Eml.Message]): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-    val rows = binaryFilesSpread(spark, pathGlob).flatMap { case (file, open) =>
-      val msgs =
-        try extract(readAll(open))
-        catch { case e: IllegalArgumentException =>
-          throw new IllegalArgumentException(s"$file: ${e.getMessage}", e)
-        }
-      msgs.zipWithIndex.map { case (m, i) =>
-        Row(file, (i + 1).toLong, m.subject, m.from, m.date, m.text)
-      }
-    }
-    val schema = StructType(Seq(
-      StructField("file", StringType), StructField("message", LongType),
-      StructField("subject", StringType), StructField("mail_from", StringType),
-      StructField("date", StringType), StructField("text", StringType)))
-    spark.createDataFrame(rows, schema)
-  }
+  /** The columns after (file, message) of a mail source, eml or mbox. */
+  private val mailColumns = strings("subject", "mail_from", "date", "text")
 
   /** WebDataset-style archive shards: one row per member —
     * (shard, entry, key, ext, n_bytes, content) with the key/ext split at
@@ -842,10 +786,10 @@ object Sources {
     * `Tar.memberCap`, never the archive), and a glob may mix `.tar`,
     * `.tar.gz`/`.tgz` and `.zip` shards — the container is sniffed
     * per-file so a heterogeneous corpus reads in one pass. */
-  private def readArchive(spark: SparkSession, pathGlob: String): DataFrame = {
+  private def readArchive(spark: SparkSession, path: String, matches: Seq[FileStatus]): DataFrame = {
     import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{BinaryType, LongType, StringType, StructField, StructType}
-    val rows = binaryFilesSpread(spark, pathGlob).flatMap { case (file, open) =>
+    import org.apache.spark.sql.types.BinaryType
+    val rows = binaryFilesSpread(spark, path, matches).flatMap { case (file, open) =>
       val lower = file.toLowerCase
       val entries =
         try {
@@ -988,7 +932,6 @@ object Sources {
     * single reducer. */
   private def readMbox(spark: SparkSession, pathGlob: String): DataFrame = {
     import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
     import org.apache.hadoop.io.{LongWritable, Text}
     import org.apache.hadoop.mapreduce.lib.input.{FileSplit, TextInputFormat}
     def records() = {
@@ -1071,10 +1014,7 @@ object Sources {
         }
       }
     }
-    val schema = StructType(Seq(
-      StructField("file", StringType), StructField("message", LongType),
-      StructField("subject", StringType), StructField("mail_from", StringType),
-      StructField("date", StringType), StructField("text", StringType)))
-    spark.createDataFrame(rows, schema)
+    spark.createDataFrame(rows,
+      StructType(StructField("file", StringType) +: StructField("message", LongType) +: mailColumns))
   }
 }

@@ -27,10 +27,10 @@ object Warc {
 
   /** keepTypes: e.g. Set("conversion") for WET, Set("response") for WARC;
     * empty keeps every record. */
-  def read(spark: SparkSession, pathGlob: String,
+  def read(spark: SparkSession, path: String, matches: Seq[org.apache.hadoop.fs.FileStatus],
            keepTypes: Set[String] = Set("conversion", "response")): DataFrame = {
     val keep = keepTypes // serializable copy
-    val rows = Sources.binaryFilesSpread(spark, pathGlob).flatMap {
+    val rows = Sources.binaryFilesSpread(spark, path, matches).flatMap {
       case (file, open) =>
         val raw = new java.io.BufferedInputStream(open())
         val in =

@@ -25,9 +25,7 @@ import org.apache.spark.sql.execution.ExplainMode
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = graft.Session.build()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.Graph.quietCheckpointReleaseWarns()
+    val spark = graft.Session.harness("ERROR")
     // owns the binary parquet staged for the scan-shaped audits
     val tmp = java.nio.file.Files.createTempDirectory("graft-audit")
     try {
@@ -40,12 +38,6 @@ object PlanAudit {
   private def explain(df: DataFrame): String =
     df.queryExecution.explainString(ExplainMode.fromString("formatted"))
 
-  /** Releases a query's operator persists before the next one plans. */
-  private def cleanup(spark: SparkSession): Unit = {
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-  }
-
   private def dump(spark: SparkSession, sfDir: String, tag: String, suffix: String,
                    names: Seq[String]): Unit = {
     val dir = java.nio.file.Paths.get(s"plans/$tag")
@@ -54,7 +46,7 @@ object PlanAudit {
       val txt = explain(graft.SparkEntry.queries(name)(spark, sfDir))
       java.nio.file.Files.write(dir.resolve(s"${name}_$suffix.txt"), txt.getBytes("UTF-8"))
       println(s"wrote plans/$tag/${name}_$suffix.txt (${txt.length} chars)")
-      cleanup(spark)
+      graft.Session.releaseCaches(spark)
     }
   }
 
@@ -133,7 +125,7 @@ object PlanAudit {
 
     interesting.foreach { case (name, checks) =>
       val plan = explain(audited(name))
-      cleanup(spark)
+      graft.Session.releaseCaches(spark)
       sb.append(s"## $name\n\n")
       checks.foreach { c =>
         val hit = plan.contains(c)

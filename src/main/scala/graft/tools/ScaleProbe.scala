@@ -270,7 +270,8 @@ object ScaleProbe {
         GenWarc.write(in.scratch.resolve(f"part-$i%02d.wet.gz").toString,
           g.map(r => (s"http://doc/${r.get(0)}", r.getString(1))).toSeq, gzip = true)
       }
-      () => graft.engine.Warc.read(in.spark, s"${in.scratch}/*.wet.gz").count()
+      () => graft.engine.Sources.read(in.spark, "probe_wet",
+        Map("file" -> s"${in.scratch}/*.wet.gz"), in.scratch).count()
     }),
     // mail-archive ingest: ONE mbox of n messages (no object-size
     // convention), written untimed; the read must fan out over 16 MiB
@@ -443,10 +444,7 @@ object ScaleProbe {
     val base = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "/tmp/graft-scale")
     val only = sys.env.get("SPARK_GRAFT_LEGS").map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val legs = Legs.filter(l => only.forall(_.contains(l.name)))
-    val spark = graft.Session.build()
-    spark.sparkContext.setLogLevel("WARN")
-    Graph.quietCheckpointReleaseWarns() // each leg's cleanup releases the graph legs' checkpoints
-    spark.range(1000000).selectExpr("sum(id)").write.format("noop").mode("overwrite").save()
+    val spark = graft.Session.harness(warm = true)
 
     for {
       f <- Seq(Docs, Lineitem, Events)
@@ -482,8 +480,7 @@ object ScaleProbe {
       result
     } finally {
       spark.sparkContext.setJobDescription(null)
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+      graft.Session.releaseCaches(spark)
       org.apache.commons.io.FileUtils.deleteQuietly(scratch.toFile)
     }
   }

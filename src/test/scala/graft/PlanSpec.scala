@@ -400,24 +400,9 @@ class PlanSpec extends SparkSpec {
     import spark.implicits._
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (1L, 4L), (3L, 4L))
       .toDF("src", "dst") // node 4 is dangling
-    def stagesFor(iters: Int): Int = {
-      val c = new java.util.concurrent.atomic.AtomicInteger
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onStageSubmitted(
-            s: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
-          c.incrementAndGet()
-      }
-      spark.sparkContext.addSparkListener(l)
-      try {
-        graft.functions.Graph.pageRank(edges, "src", "dst",
-          iters = iters, dangling = "redistribute").count()
-        // listener delivery is async: wait for the count to go quiescent
-        var last = -1
-        var spins = 0
-        while (c.get != last && spins < 50) { last = c.get; Thread.sleep(100); spins += 1 }
-        c.get
-      } finally spark.sparkContext.removeSparkListener(l)
-    }
+    def stagesFor(iters: Int): Int =
+      Metrics.collect(spark)(graft.functions.Graph.pageRank(edges, "src", "dst",
+        iters = iters, dangling = "redistribute").count())._2.stages.size
     val s2 = stagesFor(2); val s4 = stagesFor(4); val s6 = stagesFor(6)
     val d1 = s4 - s2; val d2 = s6 - s4
     assert(d2 <= d1 + 2,

@@ -808,14 +808,17 @@ class EngineSpec extends SparkSpec {
          |    extension: jsonl
          |""".stripMargin)
     val bos = new java.io.ByteArrayOutputStream()
-    Console.withErr(new java.io.PrintStream(bos)) {
-      new Engine(spark).run(dir.resolve("p.yaml").toString)
+    // the outer window counts the stages the run ran; what was printed is
+    // read as soon as run returns, before that window drains the bus
+    val (printed, w) = graft.Metrics.collect(spark) {
+      Console.withErr(new java.io.PrintStream(bos)) {
+        new Engine(spark).run(dir.resolve("p.yaml").toString)
+      }
+      bos.toString
     }
-    // listener events are delivered on the bus thread; give them a moment
-    val deadline = System.nanoTime() + 5000000000L
-    while (!bos.toString.contains("[progress]") && System.nanoTime() < deadline)
-      Thread.sleep(50)
-    assert(bos.toString.contains("[progress] stage"))
+    val lines = printed.linesIterator.filter(_.startsWith("[progress] stage")).toList
+    assert(w.stages.nonEmpty && lines.size == w.stages.size, printed)
+    assert(lines.forall(_.endsWith("graft: destinations.d")), lines)
   }
 
   test("unknown operation/node config keys warn on stderr but do not fail") {
@@ -830,6 +833,35 @@ class EngineSpec extends SparkSpec {
       assert(out.count() == 1)
     }
     assert(bos.toString.contains("Config `decsending` not defined for operation `sort_rows`"))
+  }
+
+  test("the key table lists every operation: misspelled keys warn, honoured keys do not") {
+    import spark.implicits._
+    val engine = new Engine(spark)
+    val df = Seq(("1", "<p>a b</p>", "x")).toDF("id", "text", "v")
+    def warnings(op: (String, Any)*): (Seq[String], String) = {
+      val bos = new java.io.ByteArrayOutputStream()
+      val cols = Console.withErr(new java.io.PrintStream(bos)) {
+        engine.applyOperation(df, op.toMap, Map.empty, "transformations.t").columns.toSeq
+      }
+      (cols, bos.toString)
+    }
+    for ((name, typo) <- Seq("quality_filter" -> "min_wrods", "c4_clean" -> "min_lnies",
+      "html_to_text" -> "colunm")) {
+      val (_, err) = warnings("operation" -> name, "column" -> "text", typo -> 1)
+      assert(err.contains(s"Config `$typo` not defined for operation `$name`"), name)
+    }
+    // `column` is honoured through the single-column form of `columns`
+    for ((op, cols) <- Seq(
+      Seq("operation" -> "drop_columns", "column" -> "v") -> Seq("id", "text"),
+      Seq("operation" -> "keep_columns", "column" -> "v") -> Seq("v"),
+      Seq("operation" -> "sort_rows", "column" -> "v") -> Seq("id", "text", "v"),
+      Seq("operation" -> "combine_columns", "column" -> "v", "new_column" -> "c") ->
+        Seq("id", "text", "v", "c"))) {
+      assert(warnings(op: _*) == (cols, ""), op)
+    }
+    val e = intercept[IllegalArgumentException](warnings("operation" -> "no_such_op"))
+    assert(e.getMessage.contains("unknown operation `no_such_op`"), e.getMessage)
   }
 
   test("group_by steers exact quantiles to the sketch unless exact_quantiles: true") {

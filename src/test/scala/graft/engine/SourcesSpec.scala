@@ -51,6 +51,18 @@ class SourcesSpec extends SparkSpec {
     assert(df.count() == 1)
   }
 
+  test("header_rows N and list headers decode the body with the source's encoding") {
+    val dir = tmpDir
+    for ((name, city) <- Seq("enc_1.csv" -> "Z\u00fcrich", "enc_2.csv" -> "Gen\u00e8ve"))
+      Files.write(dir.resolve(name), s"Stra\u00dfe,x\nid,city\n1,$city\n".getBytes("ISO-8859-1"))
+    for ((rows, names) <- Seq(2 -> Seq("id", "city"), List(0, 1) -> Seq("Stra\u00dfe__id", "x__city"))) {
+      val df = Sources.read(spark, "enc",
+        Map("file" -> "enc_*.csv", "encoding" -> "ISO-8859-1", "header_rows" -> rows), dir)
+      assert(df.columns.toSeq == names, rows)
+      assert(df.collect().map(_.getString(1)).sorted.toSeq == Seq("Gen\u00e8ve", "Z\u00fcrich"), rows)
+    }
+  }
+
   /** The CSV options `Sources` reads delimited files with, plus Spark's
     * header inference: the header path `header_rows: 1` used to take. */
   private def inferred(file: java.nio.file.Path) = spark.read

@@ -34,6 +34,37 @@ class StreamsSpec extends SparkSpec {
       Seq((1L, 2L, 3.0), (1L, 1L, 3.0), (2L, 1L, 4.0)))
   }
 
+  test("a stream's stop() logs no job-group cancel warning; other scheduler warnings print") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val dag = "org.apache.spark.scheduler.DAGScheduler"
+    val warns = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("dag-warns", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel == Level.WARN && e.getLoggerName == dag) warns.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val root = LogManager.getContext(false).asInstanceOf[LoggerContext].getRootLogger
+    root.addAppender(appender)
+    try {
+      implicit val sqlCtx = spark.sqlContext
+      val mem = MemoryStream[Int]
+      val q = mem.toDF().writeStream.format("memory").queryName("stop_noise").start()
+      try {
+        mem.addData(1, 2)
+        q.processAllAvailable()
+      } finally q.stop()
+      // the scheduler handles stop()'s cancel requests on its event thread
+      // in order, so once a later job has run they have been handled
+      spark.sparkContext.parallelize(1 to 2, 1).count()
+      LogManager.getLogger(dag).warn("another scheduler warning")
+    } finally root.removeAppender(appender)
+    import scala.jdk.CollectionConverters._
+    assert(warns.asScala.toSeq == Seq("another scheduler warning"))
+  }
+
   test("windowedStats on a real stream emits watermarked windows") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[Event]
